@@ -42,12 +42,14 @@ from itertools import combinations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_export_spark.operators.similarity import (
     _as_double,
     cosine,
     hyperplane_signature,
 )
+from hive_export_spark.session import local_frame
 
 
 def build_ivf_index(
@@ -144,8 +146,6 @@ def ivf_topk(
         # day-zero corpus / empty increment: no queries means no
         # neighbors, not a configuration error (round-8 day-zero sweep) —
         # raising here crashed every downstream pipeline on its first day
-        from pyspark.sql import types as T
-
         # neighbor_id's type comes from the INDEX side, exactly as the
         # non-empty path derives it from the index scan's id_col — keeping
         # both code paths schema-identical even if query and corpus id
@@ -163,7 +163,8 @@ def ivf_topk(
             # footer) surfaces as Py4JJavaError and must propagate, not
             # be misread as an empty store (r11 verdict nit #2)
             neighbor_type = queries.schema[query_id_col].dataType
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType(
                 [
@@ -197,9 +198,12 @@ def ivf_topk(
         (r[query_id_col], hamming_ball(r["__qsig"], n_planes, probe_radius))
         for r in q_rows
     ]
-    bucket_map = spark.createDataFrame(
+    bucket_map = local_frame(
+        spark,
         [(qid, b) for qid, bs in per_query_buckets for b in bs],
-        [query_id_col, "sig"],
+        T.StructType(
+            [q.schema[query_id_col], T.StructField("sig", T.LongType())]
+        ),
     )
     # bounded: bucket_map = collected query signatures x Hamming-ball buckets, capped by the max_query_rows guard
     candidates = index.join(F.broadcast(bucket_map), "sig").join(
@@ -310,8 +314,6 @@ def _commit_append_stats(
     """The append protocol's LAST write: persist the drift-stats row;
     the directory's writer-committed ``_SUCCESS`` is the append's commit
     marker (docstring step 6)."""
-    from pyspark.sql import types as T
-
     stats_schema = T.StructType(
         [
             T.StructField("append_id", T.StringType()),
@@ -322,7 +324,7 @@ def _commit_append_stats(
             T.StructField("rebuild_recommended", T.BooleanType()),
         ]
     )
-    spark.createDataFrame([stats], stats_schema).coalesce(1).write.mode(
+    local_frame(spark, [stats], stats_schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(stats_dir)
 
@@ -1977,9 +1979,7 @@ def ivf_centroid_topk(
     no dequantization: the per-vector scale cancels inside
     cos(q, v/s) = dot(q, int8)/(|q|·|int8|).
     """
-    from pyspark.sql import types as T
-
-    from hive_export_spark.operators.kmeans import _sq_l2
+    from hive_export_spark.operators.kmeans import _CENTROID_SCHEMA, _sq_l2
 
     q = queries.select(
         F.col(query_id_col), _as_double(F.col(vec_col)).alias("__qv")
@@ -1998,7 +1998,8 @@ def ivf_centroid_topk(
             # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA only — transient
             # FS errors propagate (r11 verdict nit #2)
             neighbor_type = queries.schema[query_id_col].dataType
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType(
                 [
@@ -2059,22 +2060,33 @@ def ivf_centroid_topk(
         with _single_job_take(spark):
             return q.limit(max_query_rows + 1).collect()
 
-    # Round-14 (guide §2.6 — overlap independent jobs): the three
-    # pre-probe driver round-trips share NO inputs — the bounded
-    # centroid collect (footer read + FS byte listing + one job), the
-    # bounded query-batch collect (one job), and the tombstone-tier
-    # read/listing (footer read + FS listing, no job) only meet at
-    # their OUTPUTS, in the local rank and the final plan. Submitting
-    # them on a 3-thread driver pool overlaps each one's scheduling
-    # and FS latency with the others' instead of paying the sum of
-    # three round-trips per probe. Results are unchanged; error
-    # precedence too (centroid errors surface first, exactly like the
-    # old sequential order). The only conf the threads touch is
-    # _single_job_take's limit-ramp key, which no other leg reads (the
-    # centroid collect is unbounded, the tombstone read runs no job).
-    # Day-zero note: an empty index now pays the (tiny) query-batch
-    # job it used to skip — the empty-store early return is a test
-    # shape, not a serving path.
+    # The three pre-probe driver round-trips share NO inputs — the
+    # bounded centroid collect, the bounded query-batch collect, and the
+    # tombstone-tier read/listing only meet at their OUTPUTS, in the
+    # local rank and the final plan — so a 3-thread driver pool overlaps
+    # their scheduling and FS latency instead of paying the sum per
+    # probe. Error precedence is unchanged (centroid errors surface
+    # first). The only conf the threads touch is _single_job_take's
+    # limit-ramp key, which no other leg reads.
+    #
+    # Spark jobs of a warm single-tier probe (rerank=None, no tombstone
+    # tier) — 8, for one query or a batch:
+    #   1. query-batch collect: the caller's query plan (Python-worker
+    #      tasks only if the caller built its frame from a Python list);
+    #   2. centroid-table schema inference (parquet footer job);
+    #   3. centroid-table collect;
+    #   4. exact-tier schema inference (parquet footer job);
+    #   5-6. broadcast builds of the probe pairs and the probed query
+    #      rows: JVM-only scans of their Arrow LocalRelations (a frame
+    #      built from a Python list would start Python workers here);
+    #   7. candidate scan + joins + per-query partial top-k, up to the
+    #      window shuffle;
+    #   8. the final window ranking.
+    # rerank=C runs 13: job 4 reads the coarse tier's footer, jobs 5-8
+    # run once for the shortlist collect and once more for the final
+    # plan (shortlist broadcast in place of the probe pairs), and the
+    # exact tier's footer job runs between them. A committed tombstone
+    # tier adds its footer job.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as _pool:
@@ -2134,7 +2146,12 @@ def ivf_centroid_topk(
                 r for r in q_rows if r[query_id_col] is not None
             ]
     if pairs is None:
-        cents = spark.createDataFrame(cent_rows)
+        # the centroid table holds kmeans_fit's (cluster_id, centroid)
+        cents = local_frame(
+            spark,
+            [(r["cluster_id"], r["centroid"]) for r in cent_rows],
+            _CENTROID_SCHEMA,
+        )
         w_cent = Window.partitionBy(query_id_col).orderBy(
             "__cd2", "cluster_id"
         )
@@ -2173,8 +2190,12 @@ def ivf_centroid_topk(
     # both paths yield (query_id, cid) 2-tuples (the distributed path's
     # Rows are tuples in that select order)
     probe_cids = sorted({r[1] for r in pairs})
-    bucket_map = spark.createDataFrame(
-        [tuple(r) for r in pairs], [query_id_col, "cid"]
+    bucket_map = local_frame(
+        spark,
+        pairs,
+        T.StructType(
+            [q.schema[query_id_col], T.StructField("cid", T.LongType())]
+        ),
     )
     if local_q_rows is not None:
         # the probed query rows are already on the driver: hand the final
@@ -2182,9 +2203,7 @@ def ivf_centroid_topk(
         # frame (NULL query ids drop here exactly as the old inner join
         # on query_id dropped them)
         # bounded: local_q_rows = the collected query batch, capped at max_query_rows by the fast-path guard above
-        q_probed = F.broadcast(
-            spark.createDataFrame(local_q_rows, q.schema)
-        )
+        q_probed = F.broadcast(local_frame(spark, local_q_rows, q.schema))
     else:
         # bounded: q joins the <= max_query_rows collected probe pairs on query_id
         q_probed = F.broadcast(
@@ -2276,10 +2295,7 @@ def ivf_centroid_topk(
             _isin_literal("cid", probe_cids)
             & _isin_literal(id_col, short_ids)
         )
-        short_map = spark.createDataFrame(
-            [(r[query_id_col], r[id_col]) for r in short_rows],
-            [query_id_col, id_col],
-        )
+        short_map = local_frame(spark, short_rows, shortlist.schema)
         # bounded: short_map = collected per-query shortlists, capped by the max_query_rows guard
         candidates = exact_tier.join(F.broadcast(short_map), id_col).join(
             q_probed, query_id_col

@@ -31,6 +31,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from hive_export_spark.session import local_frame
+
+# the driver-held centroid matrix every k-means pass broadcasts
+_CENTROID_SCHEMA = T.StructType(
+    [
+        T.StructField("cluster_id", T.LongType()),
+        T.StructField("centroid", T.ArrayType(T.DoubleType())),
+    ]
+)
 
 
 def _as_double(vec):
@@ -187,9 +198,10 @@ def _parallel_init_rows(
         tuple(vec): None for _, vec in seed_rows
     }
     for rnd in range(1, rounds + 1):
-        cand_df = spark.createDataFrame(
+        cand_df = local_frame(
+            spark,
             [(i + 1, list(c)) for i, c in enumerate(cand)],
-            "cluster_id long, centroid array<double>",
+            _CENTROID_SCHEMA,
         )
         scored = assign_clusters(
             v, cand_df, id_col=id_col, vec_col=vec_col
@@ -230,9 +242,10 @@ def _parallel_init_rows(
         cand,
         key=lambda c: tuple((x != x, 0.0 if x != x else x) for x in c),
     )
-    cand_df = spark.createDataFrame(
+    cand_df = local_frame(
+        spark,
         [(i + 1, list(c)) for i, c in enumerate(cand_list)],
-        "cluster_id long, centroid array<double>",
+        _CENTROID_SCHEMA,
     )
     weights = {
         r["cluster_id"]: r["w"]
@@ -345,9 +358,7 @@ def kmeans_fit(
     converged = False
     it = 0
     for it in range(1, max_iter + 1):
-        centroids = spark.createDataFrame(
-            centroid_rows, "cluster_id long, centroid array<double>"
-        )
+        centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
         assignment = assign_clusters(
             v, centroids, id_col=id_col, vec_col=vec_col
         )
@@ -369,9 +380,7 @@ def kmeans_fit(
             # empty cluster: k-means proper keeps k fixed by re-seeding;
             # for curation use a shrunken k is fine — document, proceed
             pass
-    final_centroids = spark.createDataFrame(
-        centroid_rows, "cluster_id long, centroid array<double>"
-    )
+    final_centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
     sizes = assignment.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members")
     )

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hive_export_spark.operators.dedup import ensure_parallelism, word_shingles
+from hive_export_spark.session import local_frame
 
 #: Diagnostic record of the most recent modal-dimension probe (r7 verdict
 #: ask #5 — dropped rows must be VISIBLE, not silently filtered):
@@ -183,7 +184,8 @@ def ml_random_projection_topk(
         # short-circuits on the first row of any healthy corpus.
         from pyspark.sql import types as T
 
-        return vectors.sparkSession.createDataFrame(
+        return local_frame(
+            vectors.sparkSession,
             [],
             T.StructType(
                 [

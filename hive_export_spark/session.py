@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -52,3 +53,38 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Driver-held rows as an Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes pickled rows
+    and re-serializes them through a Python ``map``, so every plan that
+    reads the frame runs a job whose tasks start Python workers. An
+    Arrow table instead analyzes to a ``LocalRelation``: collecting it
+    runs no job, and broadcasting it runs a JVM-only scan.
+
+    ``rows`` are tuples or ``Row`` objects in ``schema`` field order, or
+    dicts keyed by field name. Values are checked against ``schema`` with
+    the same verifier the list form uses, so a value that does not fit
+    its field raises instead of being coerced.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    names = schema.names
+    verify = _make_type_verifier(schema)
+    values = []
+    for row in rows:
+        if isinstance(row, dict):
+            row = tuple(row.get(n) for n in names)
+        verify(row)
+        values.append(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*values)) if values else [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

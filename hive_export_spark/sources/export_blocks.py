@@ -112,8 +112,18 @@ class ExportBlocksReader(DataSourceReader):
         target = to_arrow_schema(self._schema)
         # C++ NDJSON parse of the whole block (a block is the bounded unit
         # of export, sized by the producer), then conform to the advertised
-        # schema: cast parsed columns, null-fill absent ones
-        parsed = pa_json.read_json(partition.path)
+        # schema: cast parsed columns, null-fill absent ones. Timestamp
+        # fields parse straight to their target type: inference leaves
+        # some ISO forms (zone-less with a fraction) as strings, and the
+        # string cast to a zoned timestamp demands an offset, while the
+        # parser reads every zone-less form as UTC, the session zone.
+        timestamps = pa.schema(
+            [f for f in target if pa.types.is_timestamp(f.type)]
+        )
+        parsed = pa_json.read_json(
+            partition.path,
+            parse_options=pa_json.ParseOptions(explicit_schema=timestamps),
+        )
         columns = [
             parsed.column(f.name).cast(f.type)
             if f.name in parsed.column_names

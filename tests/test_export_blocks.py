@@ -94,3 +94,62 @@ def test_missing_dir_raises():
     reader = ExportBlocksReader({"path": os.path.join("/nonexistent", "x")}, schema)
     with pytest.raises(FileNotFoundError):
         reader.partitions()
+
+
+_TS_CASES = [
+    # (json text, epoch microseconds it denotes)
+    ("2024-01-02T03:04:05.123456", 1704164645123456),  # zone-less, fraction
+    ("2024-01-02 03:04:05", 1704164645000000),  # zone-less, space
+    ("2024-01-02T03:04:05+02:00", 1704157445000000),  # explicit offset
+    ("2024-01-02T03:04:05Z", 1704164645000000),  # Zulu
+]
+
+
+@pytest.fixture()
+def ts_block_dir(tmp_path):
+    (tmp_path / "block-0.jsonl").write_text(
+        "".join(
+            f'{{"event_id": {i}, "ts": "{text}"}}\n'
+            for i, (text, _) in enumerate(_TS_CASES)
+        )
+        + '{"event_id": 99, "ts": null}\n'
+    )
+    return str(tmp_path)
+
+
+def test_timestamp_forms_decode_as_utc(ts_block_dir):
+    """Every ISO form decodes; zone-less values read as UTC, the session
+    zone, whether or not pyarrow's inference would recognize them."""
+    import pyarrow as pa
+
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL("event_id bigint, ts timestamp")
+    reader = ExportBlocksReader({"path": ts_block_dir}, schema)
+    (part,) = reader.partitions()
+    got = {}
+    for b in reader.read(part):
+        assert b.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+        ids = b.column("event_id").to_pylist()
+        us = b.column("ts").cast(pa.int64()).to_pylist()
+        got.update(zip(ids, us))
+    want = {i: us for i, (_, us) in enumerate(_TS_CASES)}
+    want[99] = None
+    assert got == want
+
+
+def test_timestamp_forms_through_spark(spark, ts_block_dir):
+    register_export_blocks_source(spark)
+    df = (
+        spark.read.format("export_blocks")
+        .schema("event_id bigint, ts timestamp")
+        .option("path", ts_block_dir)
+        .load()
+    )
+    got = {
+        r.event_id: r.us
+        for r in df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+    }
+    want = {i: us for i, (_, us) in enumerate(_TS_CASES)}
+    want[99] = None
+    assert got == want

@@ -6,6 +6,8 @@ behavior-identical to the paths they replaced.
   probe set — and hence the same final rows — as the distributed rank,
   including the hostile shapes: NULL query vectors, NULL elements, NaN
   elements, duplicated query ids, and length-mismatched vectors.
+- the probe's final plan reads its driver-held frames as LocalRelations,
+  never as an ExistingRDD/LogicalRDD scan of a list-built frame.
 - brute_force_topk's hoisted per-side norms must score bit-identically
   to the per-pair cosine it replaced.
 - connected_components' carried change flag must converge to the same
@@ -88,6 +90,47 @@ def test_centroid_probe_local_rank_matches_distributed(spark, tmp_path):  # noqa
     finally:
         ivf._DRIVER_PROBE_MAX_PAIRS = saved
     assert fast1 == slow1
+
+
+def test_centroid_probe_plan_has_no_python_rdd_scan(spark, tmp_path):  # noqa: F811
+    """The probe's driver-held frames (probe pairs, probed query rows,
+    rerank shortlist) enter the final plan as LocalRelations: a
+    list-built frame would show up as an ExistingRDD/LogicalRDD scan,
+    whose job runs Python-worker tasks on every probe."""
+    from pyspark.sql import types as T
+
+    from hive_export_spark.operators.ivf import (
+        build_ivf_centroid_index,
+        ivf_centroid_topk,
+    )
+    from hive_export_spark.session import local_frame
+
+    dim = 8
+    corpus = spark.createDataFrame(
+        [
+            (i, [float((i * 5 + j * 3) % 11) - 5.0 for j in range(dim)])
+            for i in range(48)
+        ],
+        ["vec_id", "embedding"],
+    )
+    path = str(tmp_path / "idx")
+    build_ivf_centroid_index(corpus, path, n_centroids=4, max_iter=2)
+    queries = local_frame(
+        spark,
+        [(0, [1.0] * dim), (1, [-2.0] * dim)],
+        T.StructType(
+            [
+                T.StructField("query_id", T.LongType()),
+                T.StructField("embedding", T.ArrayType(T.DoubleType())),
+            ]
+        ),
+    )
+    for rerank in (None, 6):
+        res = ivf_centroid_topk(spark, path, queries, k=3, rerank=rerank)
+        plan = res._jdf.queryExecution().optimizedPlan().toString()
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+        assert "LocalRelation" in plan, plan
+        assert res.count() == 6
 
 
 def test_sq_l2_py_matches_jvm_fold(spark):  # noqa: F811
