@@ -374,8 +374,11 @@ def minhash_lsh_pairs(
     # ordered enumeration (pinned by
     # test_lsh_oversized_bucket_salting_matches_unsalted). Healthy LSH
     # buckets are far below the cap, so the salted branch is empty and
-    # costs one empty exchange; the array memory (8 bytes/id, one
-    # bucket per row) is the same bound the self-join's buffers had.
+    # costs one empty exchange. Memory is NOT linear in a degenerate
+    # bucket: its whole cell grid (~(n/cap)^2 / 2 cells, each holding
+    # two cap-id slices) is built inside ONE row before the explode, so
+    # a bucket of n ids costs O(n^2/cap) ids (8 bytes each) in the one
+    # pre-shuffle task that owns it — ~4 GB per band at n ~ 1M, cap 2048.
     cap = bucket_pair_cap if bucket_pair_cap is not None else _BUCKET_PAIR_CAP
     bucketed = (
         banded.groupBy("band", "bucket")

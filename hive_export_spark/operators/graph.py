@@ -210,12 +210,12 @@ def pagerank_int(edges: DataFrame, iterations: int = 3) -> DataFrame:
         # connected_components shape) on a warm single-JVM interleaved
         # A/B (-12%), but COLD legs said the opposite, twice over: the
         # r14 grading leg read the fused shape at 3.233 s vs 2.172 s
-        # for this shape (+49%), and the round-15 alternating
-        # cold-process A/B (tools/ab_pagerank.py, bench.py protocol,
-        # 3 legs each) read fused mins 3.224/3.731/3.912 s vs two-join
-        # mins 2.644/3.712/2.971 s — fused slower in every adjacent
-        # pair. The fused static plan duplicates the prior iteration's
-        # subtree twice per round (84 Exchange refs vs 44) and its win
+        # for this shape (+49%), and a round-15 alternating cold-process
+        # A/B (bench.py protocol, 3 legs each) read fused mins
+        # 3.224/3.731/3.912 s vs two-join mins 2.644/3.712/2.971 s —
+        # fused slower in every adjacent pair. The fused static plan
+        # duplicates the prior iteration's subtree twice per round (84
+        # Exchange refs vs 44) and its win
         # depends on AQE runtime stage reuse that cold JVMs don't
         # deliver; REVERTED round-15 (guide §1: the driver's
         # methodology is ground truth). Values are bit-identical either

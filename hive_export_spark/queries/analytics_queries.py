@@ -12,10 +12,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hive_export_spark.operators.graph import cooccurrence_edges, triangle_count
 from hive_export_spark.operators.skyline import skyline_2d
 from hive_export_spark.registry import register
+from hive_export_spark.session import local_frame
 from hive_export_spark.sources import load_table
 
 
@@ -663,8 +665,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_nodes = keep.count()
         n_edges = e.count()
         stats.append((rnd, n_nodes, n_edges))
-    return spark.createDataFrame(
-        stats, "round int, n_nodes long, n_edges long"
+    return local_frame(
+        spark, stats, StructType.fromDDL("round int, n_nodes long, n_edges long")
     )
 
 

@@ -267,14 +267,16 @@ SELECT event_type, COUNT(*) AS n_rows,
        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
 FROM events GROUP BY event_type
 """,
-    doc="custom connector through the Python DataSource API (Spark 4) — "
-    "the reference's pluggable export-decoder seam "
+    doc="custom connector as a JVM file format — the reference's "
+    "pluggable export-decoder seam "
     "(HiveExportClient.java:constructExportDecoder) re-expressed as a "
-    "Spark source plugin (sources/export_blocks.py): events are first "
-    "exported as line-JSON block files (the conduit's output format), "
-    "then read back with spark.read.format('export_blocks'), one Spark "
-    "task per block file, and aggregated. Round-tripping the decimal "
-    "sums proves the decoder is lossless on the double payload.",
+    "Spark data source registered by the engine's jar "
+    "(jvm/ExportBlocksFormat.java, sources/export_blocks.py): events are "
+    "first exported as line-JSON block files (the conduit's output "
+    "format), then read back with spark.read.format('export_blocks'), a "
+    "JSON file scan over the block files with no Python worker, and "
+    "aggregated. Round-tripping the decimal sums proves the decoder is "
+    "lossless on the double payload.",
 )
 def source_export_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

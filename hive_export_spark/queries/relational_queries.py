@@ -13,9 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hive_export_spark.operators.relational import band_join, top_k_per_group
 from hive_export_spark.registry import register
+from hive_export_spark.session import local_frame
 from hive_export_spark.sources import load_table
 
 # decimal-exact money expressions (see module docstring); widths kept tight
@@ -287,9 +289,10 @@ FROM part p LEFT JOIN bands b ON p.p_size >= b.low AND p.p_size < b.high
 )
 def join_range_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, "part", sf_dir)
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("small", 0, 17), ("medium", 17, 34), ("large", 34, 51)],
-        ["band", "low", "high"],
+        StructType.fromDDL("band string, low long, high long"),
     )
     return band_join(p, bands, "p_size").select("p_partkey", "p_size", "band")
 

@@ -528,16 +528,24 @@ def scale_dpp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a literal mapping dimension (not derived from the fact): the
     # optimizer cannot fold the category filter into a static IN on the
     # fact side, so the partition filter MUST come from the runtime
-    # dynamicpruning subquery — the pure DPP shape
-    dim = spark.createDataFrame(
-        [
-            ("click", "browse"),
-            ("view", "browse"),
-            ("error", "browse"),
-            ("purchase", "conversion"),
-            ("signup", "conversion"),
-        ],
-        ["d_type", "category"],
+    # dynamicpruning subquery — the pure DPP shape. The rows are picked
+    # from literal arrays over a Range: a LocalRelation (local_frame)
+    # would let the optimizer evaluate the category filter at compile
+    # time, leaving DPP no filter to key on, and a list-built frame
+    # starts Python workers.
+    types, categories = zip(
+        ("click", "browse"),
+        ("view", "browse"),
+        ("error", "browse"),
+        ("purchase", "conversion"),
+        ("signup", "conversion"),
+    )
+
+    def pick(values):
+        return F.element_at(F.array(*map(F.lit, values)), F.col("id").cast("int") + 1)
+
+    dim = spark.range(len(types)).select(
+        pick(types).alias("d_type"), pick(categories).alias("category")
     )
     conv = dim.filter(F.col("category") == "conversion")
     return (

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# The JVM half of the engine: the ``export_blocks`` file format, built from
+# jvm/ExportBlocksFormat.java by tools/build_export_blocks_jar.py.
+EXPORT_BLOCKS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "export-blocks.jar"
+)
+
 
 def get_spark(
     app_name: str = "hive_export_spark",
@@ -29,6 +35,9 @@ def get_spark(
       (the reference made the export timezone explicit config;
       HiveExportClient.java:74-77).
     - Arrow enabled: the sanctioned Python escape hatch is pandas_udf only.
+    - The engine's jar on ``spark.jars``, after any jars the caller passes
+      there: it registers the ``export_blocks`` format. ``spark.jars`` is
+      read when the JVM starts, so it only takes effect on a new session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
@@ -50,7 +59,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.jars"] = ",".join(
+        j for j in (conf.get("spark.jars"), EXPORT_BLOCKS_JAR) if j
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -1,151 +1,50 @@
-"""Custom connector via the Python DataSource API (Spark 4): an
-export-block reader.
+"""The ``export_blocks`` source: export-block directories decoded in the JVM.
 
 The reference engine's whole job is decoding VoltDB export blocks with a
-pluggable per-table decoder (HiveExportClient.java:constructExportDecoder
-— one decoder instance per advertised source, rows arrive as encoded
-blocks). This module is that extension seam re-expressed Spark-first: a
-``DataSource`` plugin the engine registers once, after which export-block
-directories are readable with plain ``spark.read.format("export_blocks")``
-— predicate/column behavior, partition parallelism, and downstream
-DataFrame semantics all come from Spark, the plugin only decodes.
+pluggable per-table decoder (HiveExportClient.java:constructExportDecoder,
+the block-decode loop at HiveExportClient.java:176-187), in-process on the
+JVM. Here the decoder is a JVM file format, ``jvm/ExportBlocksFormat.java``,
+registered under the short name ``export_blocks`` by the engine's jar, which
+``session.get_spark`` puts on ``spark.jars``::
+
+    spark.read.format("export_blocks").schema(ddl).option("path", dir).load()
 
 Block format (deliberately reference-shaped): a directory of files, one
-JSON object per line, one file per export block. Each file is an
-independent ``InputPartition`` so a 1000-block directory reads
-1000-way parallel — the per-(table x partition) decoder-thread shape of
-the reference (HiveExportClient.java:131-134) without any thread code.
-
-Scale notes: the decode hot path is Arrow-vectorized — each block file is
-parsed by ``pyarrow.json.read_json`` (C++ NDJSON parser) and ``read()``
-yields ``pyarrow.RecordBatch`` objects, so rows cross the Python worker
-boundary as Arrow batches, never as per-row tuples (the reference's
-block-decode loop, HiveExportClient.java:176-187, gets the vectorized
-treatment). A line-streaming per-row fallback is kept only for
-environments without ``pyarrow.json``. Schema is declared by the caller
-via ``.schema(ddl)`` — like the reference, the decoder trusts the
-advertised schema rather than inferring per block: parsed columns are
-cast to it, columns absent from a block surface as typed nulls.
-
-Filesystem note: ``partitions()``/``read()`` list and open block files
-through the local filesystem (``glob``/``open``) on purpose — the block
-directory in this engine is a local staging/spool directory, the same
-role the reference's on-host export spool plays. Reading block
-directories off HDFS/S3 is out of scope for this connector; land remote
-blocks with a plain ``spark.read`` format or sync them locally first.
+JSON object per line, one file per export block. Only ``*.jsonl`` and
+``part-*`` files are blocks; ``*.crc`` and hidden (``.x``, ``_x``) files
+are skipped, and a missing path or a directory with no block files fails
+the load. The scan is Spark's JSON file source, so blocks are split and
+packed into tasks like any other file scan, and no Python worker starts.
+Like the reference, the decoder trusts the advertised schema instead of
+inferring it per block: fields absent from a block come back as typed
+nulls, blank lines and empty blocks are tolerated, and zone-less ISO
+timestamps decode as UTC (``timeZone`` defaults to ``UTC``). A malformed
+line fails the read (``mode`` defaults to ``FAILFAST``); Spark's own
+``mode`` and JSON options pass through.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
+from py4j.protocol import Py4JJavaError
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-
-class _BlockPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class ExportBlocksDataSource(DataSource):
-    """``spark.read.format("export_blocks").option("path", dir)``.
-
-    Options:
-      path    — directory of ``*.jsonl`` / ``part-*`` block files
-      schema  — unused here (schema comes from the DDL string returned by
-                :meth:`schema` or an explicit ``.schema(...)`` call)
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "export_blocks"
-
-    def schema(self) -> str:
-        # caller normally passes .schema(ddl); this default matches the
-        # events export fixture so bare reads work too
-        return "event_id bigint, event_type string, value double"
-
-    def reader(self, schema) -> "ExportBlocksReader":
-        return ExportBlocksReader(self.options, schema)
-
-
-class ExportBlocksReader(DataSourceReader):
-    def __init__(self, options, schema):
-        path = options.get("path")
-        if not path:
-            raise ValueError("export_blocks requires .option('path', <dir>)")
-        self._path = path
-        self._schema = schema
-        self._fields = [f.name for f in schema.fields]
-
-    def partitions(self):
-        # set-dedup: the two patterns overlap (a file named
-        # part-00000.jsonl matches both) and a duplicated partition would
-        # silently double-count its rows
-        files = sorted(
-            {
-                f
-                for pat in ("*.jsonl", "part-*")
-                for f in glob.glob(os.path.join(self._path, pat))
-                if os.path.isfile(f) and not f.endswith(".crc")
-            }
-        )
-        if not files:
-            raise FileNotFoundError(f"no block files under {self._path}")
-        # one Spark task per block file — the unit of export parallelism
-        return [_BlockPartition(f) for f in files]
-
-    def read(self, partition: _BlockPartition):
-        try:
-            import pyarrow as pa
-            import pyarrow.json as pa_json
-
-            from pyspark.sql.pandas.types import to_arrow_schema
-        except ImportError:  # pragma: no cover - pyarrow is baked in here
-            yield from self._read_rows(partition)
-            return
-
-        if os.path.getsize(partition.path) == 0:
-            return  # an empty block carries no rows
-        target = to_arrow_schema(self._schema)
-        # C++ NDJSON parse of the whole block (a block is the bounded unit
-        # of export, sized by the producer), then conform to the advertised
-        # schema: cast parsed columns, null-fill absent ones. Timestamp
-        # fields parse straight to their target type: inference leaves
-        # some ISO forms (zone-less with a fraction) as strings, and the
-        # string cast to a zoned timestamp demands an offset, while the
-        # parser reads every zone-less form as UTC, the session zone.
-        timestamps = pa.schema(
-            [f for f in target if pa.types.is_timestamp(f.type)]
-        )
-        parsed = pa_json.read_json(
-            partition.path,
-            parse_options=pa_json.ParseOptions(explicit_schema=timestamps),
-        )
-        columns = [
-            parsed.column(f.name).cast(f.type)
-            if f.name in parsed.column_names
-            else pa.nulls(parsed.num_rows, f.type)
-            for f in target
-        ]
-        yield from pa.Table.from_arrays(columns, schema=target).to_batches()
-
-    def _read_rows(self, partition: _BlockPartition):
-        """Line-streaming per-row fallback (no pyarrow.json available)."""
-        fields = self._fields
-        with open(partition.path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                obj = json.loads(line)
-                yield tuple(obj.get(k) for k in fields)
+from hive_export_spark.session import EXPORT_BLOCKS_JAR
 
 
 def register_export_blocks_source(spark) -> None:
-    """Register the plugin on a session (re-registration replaces with a
-    WARN, so this is already idempotent — swallowing exceptions here
-    would only hide real registration failures)."""
-    spark.dataSource.register(ExportBlocksDataSource)
+    """Check that ``spark`` can resolve the ``export_blocks`` format.
+
+    The format is registered by the engine's jar, which ``get_spark`` puts
+    on ``spark.jars``; a session built otherwise needs it there too.
+    Raises ``RuntimeError`` naming the jar when the session lacks it.
+    """
+    datasources = spark._jvm.org.apache.spark.sql.execution.datasources
+    try:
+        datasources.DataSource.lookupDataSource(
+            "export_blocks", spark._jsparkSession.sessionState().conf()
+        )
+    except Py4JJavaError as exc:
+        raise RuntimeError(
+            "the export_blocks format is not on this session's classpath: "
+            f"start the session with spark.jars={EXPORT_BLOCKS_JAR} "
+            "(hive_export_spark.session.get_spark does this)"
+        ) from exc

@@ -135,17 +135,18 @@ def _create_dataframe_calls(path: pathlib.Path) -> list[int]:
 
 
 def test_operators_build_driver_frames_with_local_frame():
-    """Every driver-held frame in an operator goes through local_frame:
-    a ``createDataFrame(<list>)`` there would put a Python-worker job
-    back into the plans that read it."""
+    """Every driver-held frame in an operator or a registered query goes
+    through local_frame: a ``createDataFrame(<list>)`` there would put a
+    Python-worker job back into the plans that read it."""
     root = pathlib.Path(__file__).resolve().parents[1]
-    operators = root / "hive_export_spark" / "operators"
+    package = root / "hive_export_spark"
     offenders = {
         str(p.relative_to(root)): lines
-        for p in sorted(operators.rglob("*.py"))
+        for d in ("operators", "queries")
+        for p in sorted((package / d).rglob("*.py"))
         if (lines := _create_dataframe_calls(p))
     }
     assert not offenders, (
-        "build operator frames with hive_export_spark.session.local_frame, "
+        "build driver-held frames with hive_export_spark.session.local_frame, "
         f"not createDataFrame: {offenders}"
     )
