@@ -4,8 +4,10 @@ The reference engine's whole job is decoding VoltDB export blocks with a
 pluggable per-table decoder (HiveExportClient.java:constructExportDecoder,
 the block-decode loop at HiveExportClient.java:176-187), in-process on the
 JVM. Here the decoder is a JVM file format, ``jvm/ExportBlocksFormat.java``,
-registered under the short name ``export_blocks`` by the engine's jar, which
-``session.get_spark`` puts on ``spark.jars``::
+registered under the short name ``export_blocks`` by the engine's jar.
+``session.get_spark`` puts the jar on ``spark.jars``, and
+``register_export_blocks_source`` adds it at runtime to a session built
+otherwise::
 
     spark.read.format("export_blocks").schema(ddl).option("path", dir).load()
 
@@ -30,21 +32,40 @@ from py4j.protocol import Py4JJavaError
 from hive_export_spark.session import EXPORT_BLOCKS_JAR
 
 
-def register_export_blocks_source(spark) -> None:
-    """Check that ``spark`` can resolve the ``export_blocks`` format.
-
-    The format is registered by the engine's jar, which ``get_spark`` puts
-    on ``spark.jars``; a session built otherwise needs it there too.
-    Raises ``RuntimeError`` naming the jar when the session lacks it.
-    """
+def _resolves(spark) -> bool:
     datasources = spark._jvm.org.apache.spark.sql.execution.datasources
     try:
         datasources.DataSource.lookupDataSource(
             "export_blocks", spark._jsparkSession.sessionState().conf()
         )
+    except Py4JJavaError:
+        return False
+    return True
+
+
+def register_export_blocks_source(spark) -> None:
+    """Make the ``export_blocks`` format resolvable on the calling thread.
+
+    The format is registered by the engine's jar. ``get_spark`` puts it on
+    ``spark.jars``; in a session built otherwise (a driver's own plain
+    builder, say) the format does not resolve, so the jar is added here
+    with ``ADD JAR``. That adds it to the session's class loader and makes
+    the loader the context class loader of the calling thread only, so a
+    thread that reads blocks calls this before ``load()``. Raises
+    ``RuntimeError`` naming the jar when the format still does not resolve.
+    """
+    if _resolves(spark):
+        return
+    jar = EXPORT_BLOCKS_JAR
+    cause = None
+    try:
+        spark.sql(f"ADD JAR '{jar}'")
     except Py4JJavaError as exc:
-        raise RuntimeError(
-            "the export_blocks format is not on this session's classpath: "
-            f"start the session with spark.jars={EXPORT_BLOCKS_JAR} "
-            "(hive_export_spark.session.get_spark does this)"
-        ) from exc
+        cause = exc
+    if cause is None and _resolves(spark):
+        return
+    raise RuntimeError(
+        f"the export_blocks format does not resolve even after ADD JAR {jar}: "
+        f"start the session with spark.jars={jar} "
+        "(hive_export_spark.session.get_spark does this)"
+    ) from cause

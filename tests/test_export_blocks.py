@@ -118,6 +118,29 @@ def test_timestamp_forms_through_spark(spark, ts_block_dir):
     assert got == want
 
 
+def test_timestamp_forms_decode_as_utc_in_a_non_utc_session(spark, ts_block_dir):
+    """A session built outside get_spark may run in another zone; the
+    decoder still reads zone-less timestamps as UTC."""
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = (
+            spark.read.format("export_blocks")
+            .schema("event_id bigint, ts timestamp")
+            .option("path", ts_block_dir)
+            .load()
+        )
+        got = {
+            r.event_id: r.us
+            for r in df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    want = {i: us for i, (_, us) in enumerate(_TS_CASES)}
+    want[99] = None
+    assert got == want
+
+
 _NON_BLOCKS = ("README.txt", "part-00000.crc", ".x.crc", "_SUCCESS")
 
 

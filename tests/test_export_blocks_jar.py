@@ -1,24 +1,30 @@
 """The engine's jar: built from the committed source, put on the classpath
-by ``get_spark`` beside the caller's jars, and required by name.
+by ``get_spark`` beside the caller's jars, added at runtime to a session
+built otherwise, and named in the error when it cannot be loaded.
 
-The two session tests start their own JVM in a subprocess: jars join the
-classpath only when a JVM starts, and the shared test session has the
-engine's jar already.
+The session tests start their own JVM in a subprocess: ``spark.jars`` is
+read only when a JVM starts, and the shared test session has the engine's
+jar already.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import subprocess
 import sys
 import textwrap
 import zipfile
 
+import duckdb
+
+from hive_export_spark.registry import all_oracles
 from hive_export_spark.session import EXPORT_BLOCKS_JAR
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCE = os.path.join(ROOT, "hive_export_spark", "jvm", "ExportBlocksFormat.java")
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_committed_jar_is_built_from_committed_source():
@@ -67,20 +73,63 @@ def test_get_spark_keeps_the_callers_jars(tmp_path):
     assert "MARKER True\n" in out
 
 
-def test_session_without_the_jar_gets_a_clear_error(tmp_path):
+def test_plain_session_reads_blocks_after_a_runtime_add(tmp_path):
+    """A driver builds its own session: no spark.jars, a non-UTC zone.
+    ``source_export_blocks`` adds the jar itself and matches its oracle,
+    also when run again from a second thread, whose context class loader
+    does not have the jar yet."""
     out = _run(
-        """
+        f"""
+        import json, threading
         from pyspark.sql import SparkSession
-        from hive_export_spark.sources.export_blocks import register_export_blocks_source
+        from hive_export_spark.registry import all_queries
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.sql.session.timeZone", "America/New_York")
+                 .getOrCreate())
+        query = all_queries()["source_export_blocks"]
+        def rows():
+            df = query(spark, {SF_DIR!r})
+            return sorted(tuple(r) for r in df.collect())
+        print("MAIN", json.dumps(rows()))
+        got = {{}}
+        thread = threading.Thread(target=lambda: got.update(rows=rows()))
+        thread.start()
+        thread.join()
+        print("THREAD", json.dumps(got["rows"]))
+        spark.stop()
+        """,
+        tmp_path,
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
+    want = sorted(
+        [list(r) for r in con.execute(all_oracles()["source_export_blocks"]).fetchall()]
+    )
+    assert want
+    for label in ("MAIN", "THREAD"):
+        line = next(x for x in out.splitlines() if x.startswith(label + " "))
+        assert json.loads(line.split(" ", 1)[1]) == want, label
+
+
+def test_session_that_cannot_load_the_jar_gets_a_clear_error(tmp_path):
+    no_format = tmp_path / "no-format.jar"
+    with zipfile.ZipFile(no_format, "w") as jar:
+        jar.writestr("README.txt", "no data source here")
+    out = _run(
+        f"""
+        from pyspark.sql import SparkSession
+        from hive_export_spark.sources import export_blocks
+        export_blocks.EXPORT_BLOCKS_JAR = {str(no_format)!r}
         spark = (SparkSession.builder.master("local[1]")
                  .config("spark.ui.enabled", "false").getOrCreate())
         try:
-            register_export_blocks_source(spark)
+            export_blocks.register_export_blocks_source(spark)
         except RuntimeError as exc:
             print("ERROR", exc)
         spark.stop()
         """,
         tmp_path,
     )
-    assert "ERROR the export_blocks format is not on this session's classpath" in out
-    assert EXPORT_BLOCKS_JAR in out
+    assert "ERROR the export_blocks format does not resolve" in out
+    assert f"spark.jars={no_format}" in out

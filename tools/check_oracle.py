@@ -23,7 +23,7 @@ from hive_export_spark.registry import (  # noqa: E402
     all_oracles,
     all_queries,
 )
-from hive_export_spark.session import EXPORT_BLOCKS_JAR, get_spark  # noqa: E402
+from hive_export_spark.session import get_spark  # noqa: E402
 from hive_export_spark.sources import TABLE_NAMES  # noqa: E402
 
 
@@ -139,17 +139,14 @@ def frame_fingerprint(columns: list[str], rows: list[tuple]) -> tuple[int, list[
 
 def _hostile_session():
     """A driver-shaped session: plain builder, hostile defaults (non-UTC
-    timezone, stock shuffle partitions, none of get_spark's confs but the
-    engine's jar, which must be on the classpath from the JVM's start).
-    Every query must force its own runtime requirements to pass under
-    this."""
+    timezone, stock shuffle partitions, none of get_spark's confs). Every
+    query must force its own runtime requirements to pass under this."""
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.master("local[8]")
         .appName("oracle-check-hostile")
         .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.jars", EXPORT_BLOCKS_JAR)
         .getOrCreate()
     )
 
