@@ -2134,17 +2134,10 @@ def ivf_centroid_topk(
         len(q_rows) <= max_query_rows
         and len(q_rows) * n_centroids <= _DRIVER_PROBE_MAX_PAIRS
     ):
-        try:
-            import numpy  # noqa: F401 — bulk path dependency
-        except ImportError:
-            pass
-        else:
-            pairs = _rank_probe_pairs_local(
-                q_rows, cent_rows, eff_probe, query_id_col
-            )
-            local_q_rows = [
-                r for r in q_rows if r[query_id_col] is not None
-            ]
+        pairs = _rank_probe_pairs_local(
+            q_rows, cent_rows, eff_probe, query_id_col
+        )
+        local_q_rows = [r for r in q_rows if r[query_id_col] is not None]
     if pairs is None:
         # the centroid table holds kmeans_fit's (cluster_id, centroid)
         cents = local_frame(

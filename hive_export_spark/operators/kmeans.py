@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hive_export_spark.operators.similarity import _as_double
 from hive_export_spark.session import local_frame
 
 # the driver-held centroid matrix every k-means pass broadcasts
@@ -42,10 +43,6 @@ _CENTROID_SCHEMA = T.StructType(
         T.StructField("centroid", T.ArrayType(T.DoubleType())),
     ]
 )
-
-
-def _as_double(vec):
-    return F.transform(vec, lambda x: x.cast("double"))
 
 
 def _sq_l2(a, b) -> F.Column:

@@ -7,7 +7,10 @@ tests/test_streaming.py runs the SAME operators as real streaming queries
 with watermarks and checkpoints.
 
 stream_export_e2e is a genuine streaming query (availableNow trigger):
-file source -> foreachBatch partitioned write -> read-back, oracle-checked.
+file source -> built-in file sink partitioned write -> read-back,
+oracle-checked. stream_replay_exactly_once replays a batch after a
+simulated crash and checks that the sink's commit log keeps it
+exactly-once.
 """
 
 from __future__ import annotations
@@ -27,7 +30,6 @@ from hive_export_spark.streaming import (
     sliding_window_agg,
     streaming_dedup,
     streaming_export,
-    transactional_streaming_export,
     tumbling_window_agg,
 )
 
@@ -139,7 +141,7 @@ SELECT CASE WHEN event_type IS NULL OR trim(event_type, '\x01\x02\x03\x04\x05\x0
 FROM events GROUP BY 1
 """,
     doc="the reference conduit as a real streaming query: file source -> "
-    "foreachBatch JSON-encode + partitioned write with checkpoint "
+    "JSON-encode + built-in file sink partitioned write with checkpoint "
     "(availableNow trigger), then read-back (R1-R11 end to end)",
 )
 def stream_export_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,70 +169,53 @@ SELECT CASE WHEN event_type IS NULL OR trim(event_type, '\x01\x02\x03\x04\x05\x0
        COUNT(*) AS n_rows
 FROM events GROUP BY 1
 """,
-    doc="R11 block replay through the driver gate: the first micro-batch "
-    "attempt writes its full output then fails BEFORE the checkpoint "
-    "commits (injected via transactional_streaming_export's batch_hook — "
-    "the RestartBlockException analog); the restarted query replays the "
-    "batch, whose batch-id-keyed overwrite REPLACES the orphaned attempt. "
-    "Counts matching the source proves exactly-once: an append sink would "
-    "double every row of the failed attempt and hash-mismatch.",
+    doc="R11 block replay through the driver gate: the first run exports "
+    "the stream, then the checkpoint's last commits/N entry and the "
+    "sink's _spark_metadata/N entry are deleted, which is what a crash "
+    "after the batch's files were written but before either commit leaves "
+    "(the RestartBlockException analog). The restarted query replays the "
+    "batch; the file sink logs only the new attempt's files, and Spark "
+    "readers list files through that log. Counts matching the source "
+    "prove exactly-once: a plain append would double every row and "
+    "hash-mismatch.",
 )
 def stream_replay_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from hive_export_spark.operators.parity import export_pipeline
     from hive_export_spark.queries.connector_queries import scratch_dir
 
     base = scratch_dir("stream_replay")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
-    # deterministic failure injection needs a fresh checkpoint every run
+    # the simulated crash needs a fresh checkpoint every run
     for p in (out, ckpt):
         shutil.rmtree(p, ignore_errors=True)
 
-    failed = {"done": False}
+    def run() -> DataFrame:
+        stream = read_stream_from_table(spark, "events", sf_dir)
+        streaming_export(stream, out, ckpt, ["event_type"]).awaitTermination()
+        return stream
 
-    def fail_first_attempt(batch_id: int) -> None:
-        if not failed["done"]:
-            failed["done"] = True
-            raise RuntimeError("injected block failure after write, before commit")
-
-    q = transactional_streaming_export(
-        read_stream_from_table(spark, "events", sf_dir),
-        out,
-        ckpt,
-        ["event_type"],
-        batch_hook=fail_first_attempt,
-    )
-    try:
-        q.awaitTermination()
-    except Exception:
-        pass  # the injected failure killed attempt 1; offsets uncommitted
-    else:
-        # must sit OUTSIDE the except (an AssertionError raised inside the
-        # try would be swallowed by its own handler) so a hook that stops
-        # raising fails loudly instead of degrading to a no-replay run
-        raise AssertionError("injected failure did not surface")
-    # restart on the same checkpoint: the block replays and its overwrite
-    # replaces the orphaned first-attempt files
-    q2 = transactional_streaming_export(
-        read_stream_from_table(spark, "events", sf_dir), out, ckpt, ["event_type"]
-    )
-    q2.awaitTermination()
-    # explicit read-back schema (pipeline schema + the batch=N overwrite
-    # key): a day-zero source drains in ZERO micro-batches and leaves no
-    # files to infer from (round-8 day-zero sweep)
-    from pyspark.sql import types as T
-
-    from hive_export_spark.operators.parity import export_pipeline
-
-    expected = T.StructType(
-        list(
-            export_pipeline(
-                read_stream_from_table(spark, "events", sf_dir),
-                ["event_type"],
-            ).schema.fields
-        )
-        + [T.StructField("batch", T.LongType())]
-    )
-    written = spark.read.schema(expected).parquet(out).drop("batch")
+    run()
+    _delete_last_log_entry(f"{ckpt}/commits")
+    _delete_last_log_entry(f"{out}/_spark_metadata")
+    stream = run()
+    # explicit read-back schema (schema-only, nothing executes): partitionBy
+    # of zero rows writes no data files to infer from (round-8 day-zero sweep)
+    expected = export_pipeline(stream, ["event_type"]).schema
+    written = spark.read.schema(expected).parquet(out)
     return written.groupBy("event_type").agg(F.count("*").alias("n_rows"))
+
+
+def _delete_last_log_entry(log_dir: str) -> None:
+    """Delete the newest entry (``N`` and ``.N.crc``) of a Spark metadata
+    log, which is what a crash before that entry's write leaves."""
+    entries = [int(n) for n in os.listdir(log_dir) if n.isdigit()]
+    if not entries:
+        raise AssertionError(f"no committed batch to replay in {log_dir}")
+    last = max(entries)
+    for name in (str(last), f".{last}.crc"):
+        path = os.path.join(log_dir, name)
+        if os.path.exists(path):
+            os.remove(path)
 
 
 @register(

@@ -9,7 +9,6 @@ from hive_export_spark.streaming.pipeline import (
     sliding_window_agg,
     streaming_dedup,
     streaming_export,
-    transactional_streaming_export,
     tumbling_window_agg,
 )
 
@@ -18,6 +17,5 @@ __all__ = [
     "sliding_window_agg",
     "streaming_dedup",
     "streaming_export",
-    "transactional_streaming_export",
     "tumbling_window_agg",
 ]

@@ -4,11 +4,12 @@ The reference's delivery model (SURVEY.md section 3.3) maps 1:1 onto
 Structured Streaming:
 
 - export block (onBlockStart / processRow xN / onBlockCompletion,
-  HiveExportClient.java:171-196)            -> micro-batch in foreachBatch
+  HiveExportClient.java:171-196)            -> micro-batch
 - RestartBlockException block replay (:159-162, :190-196)
                                             -> checkpointed offset replay
 - Hive transaction-batch atomic commit (HivePartitionStream.java:141-174)
-                                            -> atomic file commit per batch
+                                            -> file sink's _spark_metadata
+                                               log entry per batch
 - per-source decoder thread + 4 writer threads (HiveSink.java:45-56)
                                             -> executor task parallelism
 
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from hive_export_spark.config import UNSPECIFIED_TOKEN
-from hive_export_spark.operators.parity import export_pipeline, write_partitioned
+from hive_export_spark.operators.parity import export_pipeline, route_partitions
 
 
 def tumbling_window_agg(
@@ -139,70 +140,31 @@ def streaming_export(
     timezone: str = "UTC",
 ) -> StreamingQuery:
     """The reference's whole conduit as one streaming query: decode ->
-    JSON-encode -> token-substitute -> partition-route -> transactional
+    JSON-encode -> token-substitute -> partition-route -> exactly-once
     partitioned write (R1-R11).
 
-    foreachBatch gives each micro-batch the batch writer (atomic file
-    commit = the Hive tx batch analog); the checkpoint gives block-replay
-    semantics (RestartBlockException analog). available_now drains the
-    source then stops — used by tests; a production run would leave the
-    trigger continuous.
+    Spark's built-in file sink commits each micro-batch by writing its
+    file list to ``out_path/_spark_metadata/<batch>`` (the Hive tx-batch
+    analog). A batch replayed after a crash (the RestartBlockException
+    analog, HiveExportClient.java:159-162,190-196) is skipped if its log
+    entry exists; otherwise its files are written again and only the new
+    attempt's files are logged. Spark readers list files through that log,
+    so each row reads back once. A non-Spark reader of the directory sees
+    every file on disk, including a crashed attempt's orphans.
+
+    available_now drains the source then stops (tests, registry queries);
+    a production run leaves the trigger continuous.
     """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = export_pipeline(batch_df, partition_cols, token, timezone=timezone)
-        write_partitioned(routed, out_path, partition_cols, fmt=fmt, mode="append")
-
+    routed = route_partitions(
+        export_pipeline(stream_df, partition_cols, token, timezone=timezone),
+        partition_cols,
+    )
     writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
+        routed.writeStream.format(fmt)
+        .partitionBy(*partition_cols)
         .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def transactional_streaming_export(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    partition_cols: list[str],
-    token: str = UNSPECIFIED_TOKEN,
-    fmt: str = "parquet",
-    timezone: str = "UTC",
-    batch_hook=None,
-) -> StreamingQuery:
-    """R11 block replay with EXACTLY-ONCE output: each micro-batch writes
-    to a batch-id-keyed subdirectory with overwrite semantics, so a batch
-    replayed after a failure (the RestartBlockException analog,
-    HiveExportClient.java:159-162,190-196) REPLACES its own partial output
-    instead of appending duplicates — the idempotent-sink half of
-    Structured Streaming's exactly-once contract (checkpointed offsets are
-    the other half). The plain ``streaming_export`` append sink is
-    at-least-once under replay; this one is what a production conduit runs.
-
-    ``batch_hook(batch_id)`` runs after the write but before the
-    checkpoint commit — tests and gate queries inject failures there to
-    exercise the replay path.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = export_pipeline(batch_df, partition_cols, token, timezone=timezone)
-        write_partitioned(
-            routed,
-            f"{out_path}/batch={batch_id}",
-            partition_cols,
-            fmt=fmt,
-            mode="overwrite",
-        )
-        if batch_hook is not None:
-            batch_hook(batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(out_path)

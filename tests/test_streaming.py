@@ -5,11 +5,15 @@ HiveExportClient.java:159-162, 190-196)."""
 
 from __future__ import annotations
 
+import os
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from hive_export_spark.engine import ExportEngine
+from hive_export_spark.operators.parity import export_pipeline
 from hive_export_spark.sources import load_table, read_stream_from_table
 from hive_export_spark.streaming import (
     streaming_dedup,
@@ -94,40 +98,75 @@ def test_streaming_export_exactly_once_on_restart(spark, sf_dir, tmp_path):
     assert written.select("event_type").distinct().count() >= 5
 
 
-def test_transactional_export_replaces_failed_attempt(spark, sf_dir, tmp_path):
-    # R11 replay: attempt 1 writes its batch output then dies before the
-    # checkpoint commits; the restarted query's batch-id-keyed overwrite
-    # must REPLACE the orphaned files, not append to them
-    from hive_export_spark.streaming import transactional_streaming_export
+def _delete_last_log_entry(log_dir: str) -> bool:
+    """Delete the newest entry of a Spark metadata log (``N`` and its
+    ``.N.crc``), which is what a crash before that entry's write leaves.
+    Returns whether there was an entry to delete."""
+    if not os.path.isdir(log_dir):
+        return False
+    entries = [int(n) for n in os.listdir(log_dir) if n.isdigit()]
+    if not entries:
+        return False
+    last = max(entries)
+    for name in (str(last), f".{last}.crc"):
+        path = os.path.join(log_dir, name)
+        if os.path.exists(path):
+            os.remove(path)
+    return True
 
-    out = str(tmp_path / "txout")
-    ckpt = str(tmp_path / "txckpt")
-    n_src = load_table(spark, "events", sf_dir).count()
 
-    def boom(batch_id):
-        raise RuntimeError("injected")
-
-    q = transactional_streaming_export(
-        read_stream_from_table(spark, "events", sf_dir), out, ckpt,
-        ["event_type"], batch_hook=boom,
+@pytest.mark.parametrize("crash", ["before_checkpoint_commit", "before_sink_commit"])
+def test_export_stream_replay_after_crash_is_exactly_once(spark, sf_dir, tmp_path, crash):
+    # R11 replay (HiveExportClient.java:159-162,190-196): a crash after the
+    # batch's files are written but before the checkpoint commits it
+    # replays the batch on restart. before_sink_commit crashes one step
+    # earlier, before the sink's _spark_metadata entry is written too, so
+    # the first attempt's files are orphans on disk.
+    engine = ExportEngine.from_properties(
+        {
+            "hive.uri": "thrift://metastore:9083",
+            "hive.db": "analytics",
+            "hive.table": "events",
+            "hive.partition.columns": "EVENTS:EVENT_TYPE",
+        }
     )
-    try:
-        q.awaitTermination(120)
-    except Exception:
-        pass
-    else:
-        # outside the except so the guard can actually fire (an
-        # AssertionError inside the try would be self-swallowed)
-        raise AssertionError("injected failure did not surface")
-    # the failed attempt's files exist (written before the hook fired)
-    assert spark.read.parquet(out).count() == n_src
-
-    q2 = transactional_streaming_export(
-        read_stream_from_table(spark, "events", sf_dir), out, ckpt,
-        ["event_type"],
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    want = Counter(
+        tuple(r)
+        for r in export_pipeline(load_table(spark, "events", sf_dir), ["event_type"])
+        .select("event_type", "json_payload")
+        .collect()
     )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_src  # replaced, not doubled
+
+    def run():
+        stream = read_stream_from_table(spark, "events", sf_dir)
+        engine.export_stream(stream, out, ckpt).awaitTermination(120)
+        return export_pipeline(stream, ["event_type"]).schema
+
+    run()
+    assert _delete_last_log_entry(os.path.join(ckpt, "commits"))
+    if crash == "before_sink_commit":
+        # a sink without a commit log has no entry to delete
+        _delete_last_log_entry(os.path.join(out, "_spark_metadata"))
+    schema = run()
+
+    written = spark.read.schema(schema).parquet(out)
+    got = Counter(
+        tuple(r) for r in written.select("event_type", "json_payload").collect()
+    )
+    n_got, n_want = sum(got.values()), sum(want.values())
+    assert n_got == n_want
+    assert got == want
+    if crash == "before_sink_commit":
+        # the first attempt's files stay on disk; Spark readers skip them
+        on_disk = [
+            f
+            for d, _, files in os.walk(out)
+            if "_spark_metadata" not in d
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        assert len(on_disk) > len(written.inputFiles())
 
 
 def test_streaming_late_data_dropped(spark, tmp_path):
