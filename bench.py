@@ -43,14 +43,12 @@ HEADLINE = [
     # round-3/4 heavy operators (added round 5 so regressions in the
     # operators that carry the 100 TB story surface in BENCH, not just in
     # the correctness gate): distributed prefix-sum packing, iterative
-    # label propagation, OPH signatures, mergeable KLL, salted skew join,
-    # partition-pruned ANN probes
+    # label propagation, OPH signatures, mergeable KLL, salted skew join
     "llm_pack_sequences",
     "llm_dedup_components",
     "llm_dedup_minhash_oph",
     "agg_kll_quantile_merge",
     "scale_skew_join",
-    "llm_sim_ivf_pruned",
     # round 10: the two-tier centroid IVF probe (coarse int8 scan of the
     # nprobe nearest centroids' partitions + exact rerank of the
     # shortlist) — the recall>=0.9-at-~11%-bytes ANN operating point

@@ -1,79 +1,36 @@
-"""IVF-style persisted ANN index: bucket-partitioned storage.
+"""IVF-style persisted ANN index: centroid-partitioned storage.
 
-The in-memory LSH operators (similarity.py, ml_lsh.py) still scan the
-whole corpus to compute candidate signatures per query. At 100 TB the
-index must live in STORAGE such that a query only READS matching buckets.
-This module materializes that layout with nothing but parquet +
-partitioning, in two variants:
+``similarity.brute_force_topk`` scans the whole corpus for every query.
+At 100 TB the index must live in STORAGE such that a query only READS
+the partitions near it. This module materializes that layout with
+nothing but parquet + partitioning (classic IVF — k-means-trained
+buckets, round 10):
 
-Hyperplane variant (data-oblivious buckets):
-- build: signature = random-hyperplane bits (deterministic, seeded) →
-  write vectors partitioned by the signature value. One directory per
-  bucket; Spark's partition discovery turns the signature into a
-  partition column.
-- probe: enumerate the query signature's Hamming ball (multi-probe LSH),
-  read the index with ``sig IN (buckets)`` — a PARTITION FILTER, so only
-  the probed buckets' files are opened (asserted in tests via
-  PartitionFilters) — then exact-rescore and top-k.
-- bucket math: n_planes=6 → 64 buckets; probe radius 2 → 22 buckets/query
-  (1 + 6 + 15), i.e. ~1/3 of the corpus read instead of all of it, at any
-  scale. Tune n_planes ~ log2(corpus/bucket_target) and radius for recall.
-
-Centroid variant (classic IVF — k-means-trained buckets, round 10):
 - build: Lloyd's k-means (operators/kmeans.py — broadcast centroids,
   map-only assignment) partitions the corpus by nearest-centroid id; the
   k × dim centroid table persists beside the index.
 - probe: rank the centroids by distance to each query and read only the
   ``nprobe`` nearest centroids' partitions — the classic IVF probe order.
-  Because centroids ADAPT to the data where hyperplanes cannot, the same
-  read fraction buys materially higher recall (measured in
-  tools/ann_probe.py: hyperplane radius-2 reads ~35 % for recall
-  0.72–0.78; centroid nprobe=4/16 reads ~25 % for recall ≥ 0.9 on the
-  same corpus — receipts in SCALING.md).
+  Because centroids ADAPT to the data where data-oblivious hyperplane
+  buckets cannot, the same read fraction buys materially higher recall
+  (the round-10 receipt in SCALING.md: a hyperplane radius-2 probe read
+  ~35 % for recall 0.72–0.78; centroid nprobe=4/16 reads ~25 % for
+  recall ≥ 0.9 on the same corpus). ``probe_frac=1.0`` probes every
+  partition and returns exactly ``brute_force_topk``'s rows.
 - the per-query probe set is (query_id, nprobe centroid ids) — collected
-  driver-side under the same bounded-exchange contract as the hyperplane
-  probe's signatures, never the vectors themselves.
+  driver-side under a bounded-exchange contract, never the vectors
+  themselves.
 """
 
 from __future__ import annotations
-
-from itertools import combinations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_export_spark.operators.similarity import (
-    _as_double,
-    cosine,
-    hyperplane_signature,
-)
+from hive_export_spark.operators.similarity import _as_double, cosine
 from hive_export_spark.session import local_frame
-
-
-def build_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int = 64,
-) -> None:
-    """Materialize the bucket-partitioned index. Idempotent overwrite."""
-    indexed = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_signature(
-            _as_double(F.col(vec_col)), n_planes, dim, seed="ivf"
-        ).alias("sig"),
-    )
-    (
-        indexed.repartition("sig")
-        .write.mode("overwrite")
-        .partitionBy("sig")
-        .parquet(path)
-    )
 
 
 def _isin_literal(col_name: str, values) -> "F.Column":
@@ -92,137 +49,6 @@ def _isin_literal(col_name: str, values) -> "F.Column":
         safe = col_name.replace("`", "``")
         return F.expr(f"`{safe}` IN ({','.join(map(str, vals))})")
     return F.col(col_name).isin(vals)
-
-
-def hamming_ball(sig: int, n_planes: int, radius: int) -> list[int]:
-    """All signatures within `radius` bit flips of `sig`."""
-    out = [sig]
-    for r in range(1, radius + 1):
-        for bits in combinations(range(n_planes), r):
-            flipped = sig
-            for b in bits:
-                flipped ^= 1 << b
-            out.append(flipped)
-    return out
-
-
-def ivf_topk(
-    spark: SparkSession,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    dim: int = 64,
-    probe_radius: int = 2,
-    max_query_rows: int = 10_000,
-) -> DataFrame:
-    """Multi-probe top-k over the persisted index.
-
-    Query signatures are computed driver-side (query batches are small by
-    definition — that is what makes them queries); the union of their
-    Hamming balls becomes ONE partition-pruned index read shared by all
-    queries, then candidates are scored exactly and ranked per query.
-
-    ``max_query_rows`` guards the driver-side collect: a "query set" the
-    size of a corpus would OOM the driver and belongs in the distributed
-    all-pairs path instead.
-    """
-    q = queries.select(
-        F.col(query_id_col),
-        _as_double(F.col(vec_col)).alias("__qv"),
-    ).withColumn(
-        "__qsig", hyperplane_signature(F.col("__qv"), n_planes, dim, seed="ivf")
-    )
-    with _single_job_take(spark):
-        q_rows = (
-            q.select(query_id_col, "__qsig")
-            .limit(max_query_rows + 1)
-            .collect()
-        )
-    if not q_rows:
-        # day-zero corpus / empty increment: no queries means no
-        # neighbors, not a configuration error (round-8 day-zero sweep) —
-        # raising here crashed every downstream pipeline on its first day
-        # neighbor_id's type comes from the INDEX side, exactly as the
-        # non-empty path derives it from the index scan's id_col — keeping
-        # both code paths schema-identical even if query and corpus id
-        # types differ (r8 driver advisory #2). An unreadable store (never
-        # built, or day-zero partitionBy wrote no data files) falls back
-        # to the query id type, the only remaining domain witness.
-        try:
-            neighbor_type = spark.read.parquet(index_path).schema[
-                id_col
-            ].dataType
-        except AnalysisException:
-            # PATH_NOT_FOUND (never built) / UNABLE_TO_INFER_SCHEMA
-            # (day-zero partitionBy wrote no data files) ONLY — a
-            # transient FS/transport error (s3a throttle, corrupt
-            # footer) surfaces as Py4JJavaError and must propagate, not
-            # be misread as an empty store (r11 verdict nit #2)
-            neighbor_type = queries.schema[query_id_col].dataType
-        return local_frame(
-            spark,
-            [],
-            T.StructType(
-                [
-                    queries.schema[query_id_col],
-                    T.StructField("neighbor_id", neighbor_type),
-                    T.StructField("cosine", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"ivf_topk query set exceeds max_query_rows={max_query_rows}; "
-            "signatures are collected driver-side, so batch the queries or "
-            "use the distributed lsh_topk path "
-            "(hive_export_spark.operators.similarity) for corpus-sized "
-            "query sets"
-        )
-    probe_buckets = sorted(
-        {
-            b
-            for r in q_rows
-            for b in hamming_ball(r["__qsig"], n_planes, probe_radius)
-        }
-    )
-    index = spark.read.parquet(index_path).filter(
-        _isin_literal("sig", probe_buckets)
-    )
-
-    per_query_buckets = [
-        (r[query_id_col], hamming_ball(r["__qsig"], n_planes, probe_radius))
-        for r in q_rows
-    ]
-    bucket_map = local_frame(
-        spark,
-        [(qid, b) for qid, bs in per_query_buckets for b in bs],
-        T.StructType(
-            [q.schema[query_id_col], T.StructField("sig", T.LongType())]
-        ),
-    )
-    # bounded: bucket_map = collected query signatures x Hamming-ball buckets, capped by the max_query_rows guard
-    candidates = index.join(F.broadcast(bucket_map), "sig").join(
-        # bounded: q capped by the max_query_rows guard above
-        F.broadcast(q), query_id_col
-    )
-    scored = candidates.select(
-        query_id_col,
-        F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("__qv"), _as_double(F.col(vec_col))).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
 
 
 def _centroids_path(index_path: str) -> str:
@@ -400,7 +226,7 @@ def build_ivf_centroid_index(
     and fall to the deterministic first cluster (assign_clusters orders
     NULL dist2 first with the cluster-id tiebreak); they quantize to a
     NULL int8 array, re-surface as NULL cosine at probe time and drop out
-    of every shortlist/top-k — same convention as the hyperplane variant.
+    of every shortlist/top-k — same convention as brute_force_topk.
     A zero vector's quantization scale divides by max|x| = 0, so its int8
     array is NULL too (try_divide), matching its undefined cosine.
 
@@ -2163,9 +1989,8 @@ def ivf_centroid_topk(
             .select(query_id_col, F.col("cluster_id").alias("cid"))
         )
         # bounded collect: <= max_query_rows x min(nprobe, n_centroids)
-        # (query id, cluster id) pairs — the same driver-exchange
-        # contract as ivf_topk's signature collect; vectors themselves
-        # never leave the executors.
+        # (query id, cluster id) pairs; vectors themselves never leave
+        # the executors.
         with _single_job_take(spark):
             pairs = probe_pairs.limit(
                 max_query_rows * eff_probe + 1
@@ -2176,9 +2001,7 @@ def ivf_centroid_topk(
         raise ValueError(
             f"ivf_centroid_topk probe set exceeds max_query_rows="
             f"{max_query_rows}; probe pairs are collected driver-side, so "
-            "batch the queries or use the distributed lsh_topk path "
-            "(hive_export_spark.operators.similarity) for corpus-sized "
-            "query sets"
+            "batch the queries"
         )
     # both paths yield (query_id, cid) 2-tuples (the distributed path's
     # Rows are tuples in that select order)
@@ -2280,8 +2103,7 @@ def ivf_centroid_topk(
                 f"ivf_centroid_topk rerank shortlist exceeds "
                 f"max_query_rows={max_query_rows} x rerank={rerank}; "
                 "shortlist ids are collected driver-side, so batch the "
-                "queries or use the distributed lsh_topk path for "
-                "corpus-sized query sets"
+                "queries"
             )
         short_ids = sorted({r[id_col] for r in short_rows})
         exact_tier = spark.read.parquet(index_path).filter(

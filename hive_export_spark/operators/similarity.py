@@ -1,11 +1,12 @@
-"""Embedding similarity search (SURVEY.md section 2.2: brute-force cosine
-top-k baseline + LSH-bucketed scale path).
+"""Embedding similarity (SURVEY.md section 2.2): the brute-force cosine
+top-k baseline and random-hyperplane near-duplicate pairs.
 
 Vector math is done with higher-order array expressions (zip_with /
 aggregate) over double-cast elements — JVM-side, deterministic fold order,
-no Python. The LSH path (random-hyperplane signatures) reduces the
-candidate set before exact re-scoring; recall is tested against the
-brute-force baseline in tests/test_llm_ops.py.
+no Python. ``brute_force_topk`` is the exact oracle for the persisted
+centroid IVF probe (operators/ivf.py); ``embedding_near_dup_pairs`` bands
+hyperplane signatures to prune the all-pairs candidate set before exact
+re-scoring.
 """
 
 from __future__ import annotations
@@ -194,52 +195,3 @@ def embedding_near_dup_pairs(
         .select("vec_a", "vec_b", "cosine")
     )
 
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 12,
-    max_hamming: int = 5,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: hyperplane signatures prune the corpus to
-    candidates within `max_hamming` signature bits of the query, then
-    exact cosine re-scores candidates.
-
-    Scale shape: the corpus is scanned once to attach signatures (could be
-    precomputed/persisted); candidate filtering replaces the full cross
-    product with bit_count(xor) <= max_hamming (radius tuned for the
-    fixture: best true neighbors sit at cosine ~0.5 => expected signature
-    disagreement 4 of 12 planes, so radius 5 gives ~0.78 recall; tighter
-    corpora with real near-dups can use radius 2-3 for much harder pruning) — at 1000x data, pair this
-    with signature-bucketed storage so only matching buckets are read.
-    """
-    q = queries.select(
-        F.col(query_id_col),
-        _as_double(F.col(vec_col)).alias("__qv"),
-    ).withColumn("__qsig", hyperplane_signature(F.col("__qv"), n_planes, dim))
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__vv"),
-    ).withColumn("__vsig", hyperplane_signature(F.col("__vv"), n_planes, dim))
-    # bounded: q is the query set — small by contract; corpus side stays partitioned
-    candidates = v.crossJoin(F.broadcast(q)).filter(
-        F.bit_count(F.col("__qsig").bitwiseXOR(F.col("__vsig"))) <= max_hamming
-    )
-    scored = candidates.select(
-        query_id_col,
-        "neighbor_id",
-        cosine(F.col("__qv"), F.col("__vv")).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )

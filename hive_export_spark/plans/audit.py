@@ -158,12 +158,6 @@ def scan_scale_killers(package_root: str) -> list[str]:
     # reviewed entry is copy-paste.
     allowed_stmt: dict[tuple[str, str], str] = {
         ('operators/ivf.py',
-         'q_rows=(q.select(query_id_col,"").limit(max_query_rows+1)'
-         '.collect())'):
-            "IVF query-side collect, bounded by max_query_rows+1 via "
-            "limit(); runs under _single_job_take so the bounded take "
-            "is one job instead of the executeTake ramp (round-14)",
-        ('operators/ivf.py',
          'pairs=probe_pairs.limit(max_query_rows*eff_probe+1).collect()'):
             "centroid-IVF probe pairs: <= queries x min(nprobe, "
             "n_centroids) (query_id, cid) rows, bounded by the limit + "
@@ -196,13 +190,6 @@ def scan_scale_killers(package_root: str) -> list[str]:
          '.agg(F.count(F.lit(1)).alias("")).collect()}'):
             "k-means|| candidate weights: groupBy over candidate "
             "cluster ids — <= 1 + 2k*rounds groups, never corpus-sized",
-        ('operators/ml_lsh.py',
-         'hist=(vectors.select(F.coalesce(F.size(_as_double('
-         'F.col(vec_col))),F.lit(-1)).alias("")).groupBy("")'
-         '.agg(F.count(F.lit(1)).alias("")).collect())'):
-            "modal embedding-dimension probe: size histogram over one "
-            "pruned column — O(#distinct sizes) rows, also feeds the "
-            "last_dim_probe dropped-row report (r7 verdict ask #5)",
     }
     # a single-line key that is nothing but the bare policed call is a
     # generic waiver — exactly the gap allowed_stmt closes; reject it

@@ -336,27 +336,6 @@ FROM embeddings WHERE vec_id < 5
 
 
 @register(
-    "llm_sim_lsh_topk",
-    oracle=_RECALL_ORACLE,
-    doc="ANN top-10 via random-hyperplane LSH signatures + Hamming pruning "
-    "+ exact re-score (operators.similarity.lsh_topk). Oracle-able "
-    "formulation: the ANN result is approximate by construction, so the "
-    "query emits per-query recall_ok = |ANN top-10 ∩ exact top-10| >= 5 "
-    "(deterministic: hash-derived hyperplanes; observed fixture min 7/10 "
-    "at radius 6 of 12 planes at sf0.01 and sf0.1); the oracle lists the "
-    "query ids with literal TRUE.",
-)
-def llm_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "embeddings", sf_dir)
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = similarity.lsh_topk(e, queries, k=10, max_hamming=6)
-    exact = similarity.brute_force_topk(e, queries, k=10)
-    return _recall_ok(ann, exact, queries, min_hits=5)
-
-
-@register(
     "llm_text_token_stats",
     oracle=f"""
 SELECT doc_id,
@@ -663,69 +642,6 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "llm_dedup_minhash_ml",
-    oracle=_JACCARD_ORACLE,
-    doc="near-dup pairs via spark.ml MinHashLSH (seeded, OR-amplified "
-    "approxSimilarityJoin) + exact-Jaccard verification — the library "
-    "alternative to the expression-level MinHash; same verified output "
-    "(operators.ml_lsh.ml_minhash_pairs)",
-)
-def llm_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hive_export_spark.operators.ml_lsh import ml_minhash_pairs
-
-    d = load_table(spark, "documents", sf_dir)
-    return ml_minhash_pairs(d, threshold=0.8)
-
-
-@register(
-    "llm_sim_rp_lsh_topk",
-    oracle=_RECALL_ORACLE,
-    doc="ANN top-10 via spark.ml BucketedRandomProjectionLSH (euclidean "
-    "buckets valid for cosine on unit-norm vectors) + exact re-score "
-    "(operators.ml_lsh.ml_random_projection_topk). Oracle-able "
-    "formulation: per-query recall_ok = |ANN ∩ exact top-10| >= 7 "
-    "(seeded model; observed fixture min 9/10); oracle emits literal TRUE.",
-)
-def llm_sim_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hive_export_spark.operators.ml_lsh import ml_random_projection_topk
-
-    e = load_table(spark, "embeddings", sf_dir)
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = ml_random_projection_topk(e, queries, k=10)
-    exact = similarity.brute_force_topk(e, queries, k=10)
-    return _recall_ok(ann, exact, queries, min_hits=7)
-
-
-def _ivf_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once persisted IVF index per (process, fixture path).
-
-    Production probes a PERSISTED index — the build is an ingest-time
-    cost, not a per-query one — so repeated invocations (bench loops,
-    the topk + pruned pair) reuse the bucket-partitioned parquet via a
-    _SUCCESS gate. The scratch tree is per-process (connector_queries.
-    scratch_dir), so a driver round with regenerated fixtures always
-    starts cold; within a process the fixture files are immutable.
-
-    The gate goes through Hadoop's FileSystem (sources.files.fs_exists),
-    not os.path.exists, so a store on s3a://hdfs:// resolves the same
-    way Spark wrote it (r8 verdict ask #4).
-    """
-    import os
-
-    from hive_export_spark.operators.ivf import build_ivf_index
-    from hive_export_spark.queries.connector_queries import sf_scratch_dir
-    from hive_export_spark.sources.files import fs_exists
-
-    e = load_table(spark, "embeddings", sf_dir)
-    path = os.path.join(sf_scratch_dir("ivf_index", sf_dir), "idx")
-    if not fs_exists(spark, path + "/_SUCCESS"):
-        build_ivf_index(e, path, n_planes=6)
-    return e, path
-
-
-@register(
     "llm_sim_ivf_topk",
     oracle="""
 SELECT query_id, neighbor_id, cosine, rank FROM (
@@ -741,50 +657,36 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
   WHERE q.vec_id < 5
 ) WHERE rank <= 10
 """,
-    doc="the persisted 100 TB ANN path end-to-end: build the "
-    "signature-bucket-partitioned IVF index (operators.ivf.build_ivf_index "
-    "— parquet partitioned by hyperplane signature), then multi-probe "
-    "top-10 via partition-pruned reads (operators.ivf.ivf_topk). Probed "
-    "at radius = n_planes so the Hamming ball covers every bucket and the "
-    "result provably equals exact brute-force top-k — SQL-expressible; "
-    "sub-full-radius pruning + PartitionFilters are pinned in "
-    "tests/test_ivf.py.",
+    doc="the persisted 100 TB ANN path end-to-end at a full probe: the "
+    "centroid IVF index (operators.ivf.build_ivf_centroid_index — exact "
+    "tier partitioned by nearest-centroid id) probed with probe_frac=1.0 "
+    "via partition-pruned reads (operators.ivf.ivf_centroid_topk). A full "
+    "probe opens every centroid partition, so the result provably equals "
+    "exact brute-force top-k — SQL-expressible; sub-full-probe pruning + "
+    "PartitionFilters are pinned in tests/test_ivf.py.",
 )
 def llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e, path = _ivf_index_for(spark, sf_dir)
-    from hive_export_spark.operators.ivf import ivf_topk
+    e, path = _ivf_centroid_index_for(spark, sf_dir)
+    from hive_export_spark.operators.ivf import ivf_centroid_topk
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_topk(spark, path, queries, k=10, n_planes=6, probe_radius=6)
-
-
-@register(
-    "llm_sim_ivf_pruned",
-    oracle=_RECALL_ORACLE,
-    doc="the IVF index probed the way production would: radius 3 of 6 "
-    "planes reads 42 of 64 signature buckets via partition-pruned parquet "
-    "scans (PartitionFilters pinned in tests/test_ivf.py), then exact "
-    "re-score. Oracle-able formulation: per-query recall_ok = |IVF ∩ "
-    "exact top-10| >= 5 (deterministic seeded signatures; observed "
-    "fixture min 7/10 at sf0.01 and sf0.1); the oracle lists the query "
-    "ids with literal TRUE.",
-)
-def llm_sim_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e, path = _ivf_index_for(spark, sf_dir)
-    from hive_export_spark.operators.ivf import ivf_topk
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = ivf_topk(spark, path, queries, k=10, n_planes=6, probe_radius=3)
-    exact = similarity.brute_force_topk(e, queries, k=10)
-    return _recall_ok(ann, exact, queries, min_hits=5)
+    return ivf_centroid_topk(spark, path, queries, k=10, probe_frac=1.0)
 
 
 def _ivf_centroid_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once persisted centroid-IVF index per (process, fixture path)
-    — same _SUCCESS-gated scratch contract as _ivf_index_for, FS-agnostic
-    via Hadoop's FileSystem."""
+    """Build-once persisted centroid-IVF index per (process, fixture path).
+
+    Production probes a PERSISTED index — the build is an ingest-time
+    cost, not a per-query one — so repeated invocations (bench loops,
+    the llm_sim_ivf_topk + llm_sim_ivf_kmeans pair) reuse the
+    cid-partitioned parquet via a _SUCCESS gate. The scratch tree is
+    per-process (connector_queries.scratch_dir), so a driver round with
+    regenerated fixtures always starts cold; within a process the fixture
+    files are immutable. The gate goes through Hadoop's FileSystem
+    (sources.files.fs_exists), not os.path.exists, so a store on
+    s3a://hdfs:// resolves the same way Spark wrote it (r8 verdict ask
+    #4)."""
     import os
 
     from hive_export_spark.operators.ivf import build_ivf_centroid_index

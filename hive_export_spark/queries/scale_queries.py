@@ -804,8 +804,8 @@ SELECT rule, n_violations, n_violations = 0 AS passed FROM (
     "embedding-payload rules the quarantine-first doctrine routes here "
     "(make_hostile_fixture.py boundary notes): NULL vectors, "
     "modal-dimension mismatches (truncated/partial embedding writes — "
-    "the modal size is the same scan-order-deterministic probe "
-    "operators/ml_lsh.py uses), and non-finite elements (NaN/Inf, the "
+    "the modal size is a scan-order-deterministic count-desc, size-desc "
+    "pick), and non-finite elements (NaN/Inf, the "
     "class that flips DuckDB cosine to -1 vs Spark NaN-propagation and "
     "is therefore rejected with provenance, never computed over), plus "
     "the round-9 documents-table rules: duplicate doc_ids "
@@ -893,7 +893,7 @@ def scale_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.size("embedding").alias("__s"))
         .join(
             # bounded: 1-row modal-size aggregate (count-desc, size-desc
-            # tie-break — the ml_lsh dimension-probe convention)
+            # tie-break — deterministic under any scan order)
             F.broadcast(
                 emb.filter(F.col("embedding").isNotNull())
                 .groupBy(F.size("embedding").alias("__modal"))

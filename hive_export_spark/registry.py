@@ -110,10 +110,11 @@ DRIVER_WINDOW: tuple[str, ...] = (
 
 # ROUND-15 ROTATION HEAD (pinned NOW, per the standing r8 planning
 # discipline — exactly 50). After the r14 window lands, the residual
-# stale pool is exactly the 24 r9-era rows (newest driver row == r9 and
-# not in the r14 window, computed from CORRECTNESS_r*.json by
-# tools/evidence.py this round: 48 r9-era rows minus the 24 fills the
-# r14 window carries). Slot policy, changed-code first:
+# stale pool is exactly the 22 registered r9-era rows (newest driver row
+# == r9 and not in the r14 window, computed from CORRECTNESS_r*.json by
+# tools/evidence.py: 48 r9-era rows minus the 24 fills the r14 window
+# carries, minus two since removed from the registry). Slot policy,
+# changed-code first:
 # - the eight queries NEW in r14, never driver-checked — highest slot
 #   priority: llm_sim_ivf_delete_compacted (the takedown ->
 #   compaction-made-physical -> re-add composition, r13 verdict ask
@@ -121,19 +122,20 @@ DRIVER_WINDOW: tuple[str, ...] = (
 #   graph_label_propagation / ts_holt_linear / ts_mann_kendall /
 #   ts_theil_sen / llm_dedup_containment / graph_harmonic_centrality;
 # - the rows whose operator code changes in round 14 without a fresher
-#   driver row: llm_sim_ivf_kmeans / llm_sim_ivf_pruned /
-#   llm_sim_ivf_rebuilt / llm_sim_ivf_stream_ingest (ivf.py lease
-#   liveness heartbeat + nonce-verified claims, tombstone broadcast
-#   guard, snapshot-scoped tombstone clears, one-job maintenance scan
-#   this round — the other ivf.py consumers sit in THIS round's window
-#   and get r14 rows covering the new code) and scale_compaction
-#   (operators/maintenance.py grows the compaction transform hook that
-#   makes tombstones physical);
-# - all 24 residual r9-era rows, registry order (llm_sim_ivf_topk is
+#   driver row: llm_sim_ivf_kmeans / llm_sim_ivf_rebuilt /
+#   llm_sim_ivf_stream_ingest (ivf.py lease liveness heartbeat +
+#   nonce-verified claims, tombstone broadcast guard, snapshot-scoped
+#   tombstone clears, one-job maintenance scan this round — the other
+#   ivf.py consumers sit in THIS round's window and get r14 rows
+#   covering the new code) and scale_compaction (operators/maintenance.py
+#   grows the compaction transform hook that makes tombstones physical);
+# - all 22 residual r9-era rows, registry order (llm_sim_ivf_topk is
 #   both r9-era and r14-changed-code — it sits in this block);
-# - 13 fill slots to the OLDEST remaining evidence: r10-era rows in
-#   registry order (the seven r10-era rows displaced by the wave-3/4/5
-#   additions rejoin the pool for r16).
+# - fill slots to the OLDEST remaining evidence: r10-era rows in
+#   registry order that are in neither window, as many as keep the head
+#   at exactly 50 (the seven r10-era rows displaced by the wave-3/4/5
+#   additions rejoin the pool for r16). A query dropped from the
+#   registry frees its slot to the next such row.
 # Closure invariant after r15 lands green: nothing older than r10.
 # Machine-checked by tests/test_registry_smoke.py (length 50, all
 # registered, disjoint from THIS round's window, superset of the
@@ -153,13 +155,12 @@ ROUND15_HEAD: tuple[str, ...] = (
     "ts_theil_sen",
     "llm_dedup_containment",
     "graph_harmonic_centrality",
-    # round-14 changed-code rows (5):
+    # round-14 changed-code rows (4):
     "llm_sim_ivf_kmeans",
-    "llm_sim_ivf_pruned",
     "llm_sim_ivf_rebuilt",
     "llm_sim_ivf_stream_ingest",
     "scale_compaction",
-    # residual r9-era rows (24, registry order):
+    # residual r9-era rows (22, registry order):
     "fn_map_family",
     "fn_variant_family",
     "pivot_status_by_priority",
@@ -177,14 +178,12 @@ ROUND15_HEAD: tuple[str, ...] = (
     "llm_dedup_ngram_jaccard",
     "llm_dedup_minhash_lsh",
     "llm_dedup_embedding",
-    "llm_sim_lsh_topk",
-    "llm_sim_rp_lsh_topk",
     "llm_sim_ivf_topk",
     "llm_sample_fraction",
     "scale_zorder_scan",
     "scale_dpp_scan",
     "graph_degree_assortativity",
-    # r10-era fills (13, registry order):
+    # r10-era fills (16, registry order):
     "fmt_roundtrip_orc",
     "fmt_roundtrip_csv",
     "fmt_roundtrip_json",
@@ -198,6 +197,9 @@ ROUND15_HEAD: tuple[str, ...] = (
     "join_lateral_topk",
     "window_ntile_first_last",
     "window_distribution",
+    "window_range_frame",
+    "window_range_interval",
+    "fn_posexplode",
 )
 #
 # (Historical windows: the r5-r10 rotations and their slot-policy

@@ -40,10 +40,7 @@ PINNED = [
     # NULL pivot half into a NULL-propagating sketch merge
     "agg_kll_quantile_merge",
     # recall floor capped at the achievable exact-neighbor count
-    "llm_sim_lsh_topk",
-    "llm_sim_rp_lsh_topk",
     "llm_sim_ivf_topk",
-    "llm_sim_ivf_pruned",
     # fraction band needs an absolute floor at tiny n
     "llm_sample_fraction",
     # a one-file table is born compact

@@ -61,9 +61,7 @@ PINNED = [
     # classes 3+4: summary-row assembly + theta intersection
     "agg_theta_sketch_intersect",
     # classes 5-7: ml fit / driver guards / vacuous recall
-    "llm_sim_rp_lsh_topk",
     "llm_sim_ivf_topk",
-    "llm_sim_ivf_pruned",
     "scale_zorder_scan",
     "llm_dedup_embedding",
 ]

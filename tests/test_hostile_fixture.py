@@ -48,14 +48,11 @@ PINNED = [
     # NULL-wave class (round-6 second sweep: NULL text / value /
     # embedding payload rows): serialization sentinel round-trip,
     # outer-explode NULL-array row, rank-based stats with NULL
-    # measurements, per-row text transform NULL row retention, spark.ml
-    # LSH with a NULL vector reaching the hash UDF via pushed-down
-    # inferred filters
+    # measurements, per-row text transform NULL row retention
     "fmt_roundtrip_text",
     "fn_explode_outer",
     "stats_mad_outliers",
     "llm_intradoc_dedup",
-    "llm_sim_rp_lsh_topk",
     # malformed-JSON class (broken upstream writer in props): ANSI
     # parse_json must try, DuckDB json_extract must be json_valid-guarded
     "fn_variant_family",

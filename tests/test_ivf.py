@@ -1,67 +1,13 @@
-"""Persisted IVF index: partition-pruned probes + recall vs brute force."""
+"""Persisted centroid IVF index: partition-pruned probes + recall vs brute
+force."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from hive_export_spark.operators.ivf import build_ivf_index, hamming_ball, ivf_topk
 from hive_export_spark.operators.similarity import brute_force_topk
 from hive_export_spark.sources import load_table
-
-
-def test_hamming_ball_sizes():
-    assert len(hamming_ball(0b101010, 6, 0)) == 1
-    assert len(hamming_ball(0b101010, 6, 1)) == 7
-    assert len(hamming_ball(0b101010, 6, 2)) == 22  # 1 + 6 + 15
-
-
-def test_ivf_index_partition_pruning_and_recall(spark, sf_dir, tmp_path):
-    e = load_table(spark, "embeddings", sf_dir)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(e, path)
-
-    # the index is physically bucket-partitioned
-    assert any(p.name.startswith("sig=") for p in (tmp_path / "ivf").iterdir())
-
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # probe reads must hit partition filters, not all buckets
-    probed = spark.read.parquet(path).filter(F.col("sig").isin([0, 1, 2]))
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # the sig predicate lands in PartitionFilters (directory pruning),
-    # not in PushedFilters (row-group filtering)
-    assert "sig" in plan.split("PartitionFilters:")[1][:80]
-
-    # radius 3 reads 42/64 buckets (~2/3): for this fixture's genuinely
-    # hard neighbors (best cosine ~0.5 => ~1/3 bit-disagreement per plane)
-    # radius 2 gives only ~P(hamming<=2)=0.54 recall; real corpora with
-    # near-dup structure prune far harder at small radii
-    approx = ivf_topk(spark, path, queries, k=10, probe_radius=3)
-    exact = brute_force_topk(e, queries, k=10)
-    a_sets, e_sets = {}, {}
-    for r in approx.collect():
-        a_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in exact.collect():
-        e_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [
-        len(e_sets[q] & a_sets.get(q, set())) / len(e_sets[q]) for q in e_sets
-    ]
-    # radius-3 multi-probe over 6 planes: ~2/3 of buckets read
-    assert sum(recalls) / len(recalls) >= 0.6
-    # every query found a full top-k from the probed subset
-    assert all(len(s) == 10 for s in a_sets.values())
-
-
-def test_ivf_topk_guards_query_set_size(spark, sf_dir, tmp_path):
-    e = load_table(spark, "embeddings", sf_dir)
-    path = str(tmp_path / "ivf_guard")
-    build_ivf_index(e, path)
-    queries = e.select(F.col("vec_id").alias("query_id"), "embedding")
-    with pytest.raises(ValueError, match="max_query_rows"):
-        ivf_topk(spark, path, queries, k=3, max_query_rows=5)
 
 
 # --- two-tier centroid (k-means) IVF, round 10 ----------------------------
@@ -130,6 +76,34 @@ def test_centroid_ivf_rerank_recall_beats_budget(spark, tmp_path):
     ]
     assert sum(recalls) / len(recalls) >= 0.9
     assert all(len(s) == 10 for s in a_sets.values())
+
+
+def test_centroid_ivf_full_probe_equals_brute_force(spark, tmp_path):
+    """A full probe (probe_frac=1.0: every centroid partition opened) on
+    the exact tier returns brute_force_topk's rows bit for bit — same
+    neighbours, same ranks, same cosine doubles. This is the claim the
+    llm_sim_ivf_topk oracle pins; sub-full probes are covered by the
+    pruning and recall tests above."""
+    from hive_export_spark.operators.ivf import (
+        build_ivf_centroid_index,
+        ivf_centroid_topk,
+    )
+
+    e = load_table(spark, "embeddings", "/root/testdata/sf0.01")
+    path = str(tmp_path / "civf_full")
+    build_ivf_centroid_index(e, path, max_iter=5)
+    queries = e.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cols = ("query_id", "neighbor_id", "cosine", "rank")
+    full = ivf_centroid_topk(
+        spark, path, queries, k=10, probe_frac=1.0, rerank=None
+    )
+    exact = brute_force_topk(e, queries, k=10)
+    got = sorted(tuple(r) for r in full.select(*cols).collect())
+    want = sorted(tuple(r) for r in exact.select(*cols).collect())
+    assert len(want) == 160
+    assert got == want
 
 
 def test_centroid_ivf_day_zero_and_allnull(spark, tmp_path):

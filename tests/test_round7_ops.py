@@ -1,16 +1,12 @@
 """Round-7 hardening tests: the generalized broadcast-hint audit
-(multi-line chains + every F.broadcast position), the scan-order-proof
-ml_lsh dimension probe, and sf_scratch_dir's recursive fingerprint +
-stale-generation pruning (round-6 verdict ask #4 and all three code
-advisories)."""
+(multi-line chains + every F.broadcast position) and sf_scratch_dir's
+recursive fingerprint + stale-generation pruning (round-6 verdict ask #4
+and the code advisories)."""
 
 from __future__ import annotations
 
 import os
 import time
-
-import pytest
-from pyspark.sql import functions as F
 
 from hive_export_spark.plans.audit import scan_scale_killers
 
@@ -73,32 +69,6 @@ def test_audit_flags_unannotated_broadcast_join_hint(tmp_path):
     vs2 = scan_scale_killers(str(pkg))
     assert any("bad2.py:1" in v and "F.broadcast" in v for v in vs2)
     assert not any("good.py" in v for v in vs)
-
-
-def test_ml_lsh_dim_probe_ignores_corrupt_minority(spark):
-    # advisory #1: a single wrong-length vector must not define the corpus
-    # dimension (the old limit(1) probe let whichever row the scan
-    # returned first win). The modal-size probe keeps the majority
-    # dimension no matter where the corrupt row sorts.
-    from hive_export_spark.operators.ml_lsh import ml_random_projection_topk
-
-    rows = [(0, [1.0, 0.0])]  # corrupt: length-2, smallest id
-    import math
-
-    for i in range(1, 25):
-        a = 2 * math.pi * i / 24.0
-        rows.append((i, [math.cos(a), math.sin(a), 0.0, 0.0]))
-    e = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    queries = e.filter(F.col("vec_id") == 1).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = ml_random_projection_topk(e, queries, k=5).collect()
-    ids = {r.neighbor_id for r in got}
-    assert len(got) == 5
-    assert 0 not in ids  # the corrupt row can never be a neighbor
-    # explicit dim parameter pins the domain without any probe
-    got2 = ml_random_projection_topk(e, queries, k=5, dim=4).collect()
-    assert {r.neighbor_id for r in got2} == ids
 
 
 def _touch_tree(d):

@@ -1,10 +1,9 @@
 """Round-8 gates.
 
-1. Modal-dimension probe visibility (r7 verdict ask #5): a corpus that
+1. Mixed-dimension corpus visibility (r7 verdict ask #5): a corpus that
    mixes embedding dimensions must not lose its minority rows SILENTLY —
-   the probe reports the dropped count, and the DQ gate's
-   embeddings_dim_mismatch rule fires on the same corpus with a matching
-   count on both engines.
+   the DQ gate's embeddings_dim_mismatch rule fires on it with a
+   matching count on both engines.
 2. Shuffle-linearity standing gate (r7 verdict ask #6) lives in
    tests/test_shuffle_linearity.py (subprocess-isolated probe sessions).
 """
@@ -12,69 +11,10 @@
 from __future__ import annotations
 
 import os
-import random
 import shutil
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
-
-import hive_export_spark.operators.ml_lsh as ml_lsh
-
-
-@pytest.fixture()
-def mixed_dim_corpus(spark):
-    """46 vectors: 40 unit-norm dim-8 (the modal model), 6 dim-4 (a
-    second embedding model or truncated writes), 1 NULL (failed job)."""
-    random.seed(7)
-    rows = []
-    for i in range(40):
-        v = [random.gauss(0, 1) for _ in range(8)]
-        n = sum(x * x for x in v) ** 0.5
-        rows.append((i, [x / n for x in v]))
-    for i in range(40, 46):
-        rows.append((i, [0.5] * 4))
-    rows.append((46, None))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_modal_dim_probe_reports_dropped_rows(spark, mixed_dim_corpus):
-    """The probe must (a) pick the modal dimension deterministically,
-    (b) exclude every non-modal/NULL row from the candidate set, and
-    (c) make that exclusion VISIBLE via last_dim_probe instead of
-    silently filtering (r7 verdict ask #5)."""
-    ml_lsh.last_dim_probe = None
-    q = mixed_dim_corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = ml_lsh.ml_random_projection_topk(mixed_dim_corpus, q, k=5)
-    neighbors = {r.neighbor_id for r in out.collect()}
-
-    report = ml_lsh.last_dim_probe
-    assert report is not None
-    assert report["dim"] == 8
-    assert report["n_valid"] == 40
-    assert report["n_dropped"] == 7  # 6 dim-4 + 1 NULL
-    assert report["sizes"] == {8: 40, 4: 6, -1: 1}
-    # no minority-dimension or NULL row reached the candidate set
-    assert not neighbors & set(range(40, 47))
-
-
-def test_modal_dim_probe_skipped_when_dim_explicit(spark, mixed_dim_corpus):
-    """An explicit dim both skips the probe collect (no driver exchange)
-    and pins which model is 'valid' — the caller's override for corpora
-    where the minority model is the wanted one."""
-    ml_lsh.last_dim_probe = None
-    q = mixed_dim_corpus.filter(F.col("vec_id") == 40).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = ml_lsh.ml_random_projection_topk(
-        mixed_dim_corpus, q, k=5, dim=4, euclidean_threshold=10.0
-    )
-    neighbors = {r.neighbor_id for r in out.collect()}
-    assert ml_lsh.last_dim_probe is None  # probe did not run
-    assert neighbors <= set(range(40, 46)) and neighbors  # dim-4 rows only
-
 
 @pytest.fixture()
 def mixed_dim_sf_dir(spark, tmp_path, sf_dir):
@@ -104,8 +44,7 @@ def mixed_dim_sf_dir(spark, tmp_path, sf_dir):
 
 
 def test_dq_gate_fires_on_mixed_dim_corpus(spark, mixed_dim_sf_dir):
-    """scale_dq_checks' embeddings_dim_mismatch rule (the route the
-    probe's dropped rows are documented to take) FIRES on a mixed-dim
+    """scale_dq_checks' embeddings_dim_mismatch rule FIRES on a mixed-dim
     corpus, with the same count on Spark and the DuckDB oracle."""
     from hive_export_spark.registry import get
 

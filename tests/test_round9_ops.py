@@ -4,7 +4,7 @@
    fixtures (every query has >= min_hits exact neighbors), and the
    n_exact==0 case is explicit — the gate cannot be vacuously satisfied
    by an ANN path that silently returns nothing (advisory #1).
-2. ivf_topk's empty-query early return derives neighbor_id's type from
+2. ivf_centroid_topk's empty result derives neighbor_id's type from
    the INDEX side, keeping both code paths schema-identical even when
    query and corpus id types differ (advisory #2).
 3. agg_approx_count_distinct / agg_hll_sketch_union booleans are
@@ -99,14 +99,12 @@ def test_ivf_empty_query_schema_comes_from_index_side(spark, tmp_path):
         [Row(vec_id=i, embedding=[float(i), 1.0, 0.0, 0.0]) for i in range(20)]
     )
     path = str(tmp_path / "ivf_index")
-    ivf.build_ivf_index(corpus, path, n_planes=4, dim=4)
+    ivf.build_ivf_centroid_index(corpus, path, n_centroids=4)
 
     int_queries = spark.createDataFrame(
         [], "query_id int, embedding array<double>"
     )
-    empty = ivf.ivf_topk(
-        spark, path, int_queries, k=3, n_planes=4, dim=4, probe_radius=1
-    )
+    empty = ivf.ivf_centroid_topk(spark, path, int_queries, k=3, nprobe=2)
     assert empty.count() == 0
     assert empty.schema["neighbor_id"].dataType.simpleString() == "bigint"
     assert empty.schema["query_id"].dataType.simpleString() == "int"
@@ -115,9 +113,7 @@ def test_ivf_empty_query_schema_comes_from_index_side(spark, tmp_path):
     long_queries = spark.createDataFrame(
         [Row(query_id=0, embedding=[1.0, 1.0, 0.0, 0.0])]
     )
-    got = ivf.ivf_topk(
-        spark, path, long_queries, k=3, n_planes=4, dim=4, probe_radius=1
-    )
+    got = ivf.ivf_centroid_topk(spark, path, long_queries, k=3, nprobe=2)
     assert got.schema["neighbor_id"].dataType.simpleString() == "bigint"
     assert got.count() > 0
 
@@ -127,8 +123,8 @@ def test_ivf_empty_query_missing_index_falls_back(spark, tmp_path):
     returns the stable schema, typed from the only witness left — the
     query id column."""
     q = spark.createDataFrame([], "query_id long, embedding array<double>")
-    empty = ivf.ivf_topk(
-        spark, str(tmp_path / "never_built"), q, k=3, n_planes=4, dim=4
+    empty = ivf.ivf_centroid_topk(
+        spark, str(tmp_path / "never_built"), q, k=3, nprobe=2
     )
     assert empty.count() == 0
     assert empty.schema["neighbor_id"].dataType.simpleString() == "bigint"

@@ -1,21 +1,25 @@
-"""Measured scaling probe for the ANN path (IVF vs brute force).
+"""Measured scaling probe for the ANN path (centroid IVF vs brute force).
 
-SCALING.md argues the persisted IVF index turns similarity search from
-"scan the corpus per query batch" into "read only the probed buckets";
-this tool MEASURES wall and recall as the corpus grows past fixture
-scale. Corpus construction: replica r of the embeddings table rotates
-each vector's dims by r positions (norm-preserving, distribution-
-isomorphic, vectors distinct across replicas) and remaps vec_id by a 1M
-stride — so corpus size grows k x while the query set and the geometry
-of its true neighbors stay comparable.
+SCALING.md argues the persisted centroid IVF index turns similarity
+search from "scan the corpus per query batch" into "read only the probed
+partitions"; this tool MEASURES wall, recall and read fraction as the
+corpus grows past fixture scale. Corpus construction: replica r of the
+embeddings table rotates each vector's dims by r positions
+(norm-preserving, distribution-isomorphic, vectors distinct across
+replicas) and remaps vec_id by a 1M stride — so corpus size grows k x
+while the query set and the geometry of its true neighbors stay
+comparable.
 
-For each (replication, n_planes, probe_radius) config it records:
-brute-force exact top-10 wall (the baseline that scans everything), IVF
-build wall (paid once at ingest), IVF multi-probe wall, recall@10
-against the exact answer on the SAME corpus, and the storage-pruning
-fractions — per query (mean) and for the batch UNION of Hamming balls
-(which saturates when 2^n_planes is small relative to #queries x ball
-size; the measured results live in SCALING.md's IVF entry).
+Two legs, each printing one JSON line per config:
+- ``ann_centroid``: fixed 16 centroids, nprobe 12, rerank 30 — the
+  two-tier operating point (round 10);
+- ``ann_centroid_scaling``: k ~ sqrt(N) derived at build time and
+  nprobe a fixed fraction of k (round 11), plus fixed k=16 and a
+  2x-derived k on the 10x corpus to isolate the k-axis.
+Each records brute-force exact top-10 wall (the baseline that scans
+everything), index build wall (paid once at ingest), probe wall,
+recall@10 against the exact answer on the SAME corpus, and the per-query
+read fractions (coarse-tier rows and bytes).
 
 Usage:  python tools/ann_probe.py [sf_dir] [replications ...]
         (defaults: /root/testdata/sf0.1, 1 3 10)
@@ -24,6 +28,7 @@ Usage:  python tools/ann_probe.py [sf_dir] [replications ...]
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
@@ -34,18 +39,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from pyspark.sql import Window  # noqa: E402
+
 from hive_export_spark.operators.ivf import (  # noqa: E402
     build_ivf_centroid_index,
-    build_ivf_index,
-    hamming_ball,
+    derive_n_centroids,
     ivf_centroid_topk,
-    ivf_topk,
 )
-from hive_export_spark.operators.similarity import (  # noqa: E402
-    _as_double,
-    brute_force_topk,
-    hyperplane_signature,
-)
+from hive_export_spark.operators.kmeans import _sq_l2  # noqa: E402
+from hive_export_spark.operators.similarity import brute_force_topk  # noqa: E402
 from hive_export_spark.session import get_spark  # noqa: E402
 from hive_export_spark.sources import load_table  # noqa: E402
 
@@ -86,6 +88,97 @@ def replicated_vectors(spark, sf_dir: str, k: int, out_root: str) -> str:
     return path
 
 
+def coarse_rows_per_query(spark, idx_path: str, queries, nprobe: int) -> float:
+    """Mean coarse-tier rows a query reads: the rows of its ``nprobe``
+    nearest centroids' partitions, ranked exactly as the probe ranks
+    them (squared L2, cluster-id tiebreak)."""
+    cents = spark.read.parquet(idx_path + "_centroids")
+    by_cid = {
+        r["cid"]: r["cnt"]
+        for r in spark.read.parquet(idx_path)
+        .groupBy("cid")
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+    qv = queries.select(
+        "query_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("__qv"),
+    )
+    # bounded: cents is the n_centroids x dim trained centroid table
+    ranked = (
+        qv.crossJoin(F.broadcast(cents))
+        .select(
+            "query_id",
+            "cluster_id",
+            _sq_l2(
+                F.col("__qv"),
+                F.transform("centroid", lambda x: x.cast("double")),
+            ).alias("d2"),
+        )
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy("d2", "cluster_id")
+            ),
+        )
+        .filter(F.col("rk") <= nprobe)
+        .collect()
+    )
+    per_q: dict = {}
+    for r in ranked:
+        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + by_cid.get(
+            r["cluster_id"], 0
+        )
+    return sum(per_q.values()) / len(per_q)
+
+
+def measure(spark, corpus, queries, idx_path: str, n_centroids, **probe):
+    """Build the index, probe it, and return wall, recall@10 and the
+    per-query read fractions. Bytes accounting: the flat baseline reads
+    n x dim x 8 B; the two-tier probe reads (coarse rows in probed
+    partitions) x dim x 1 B (int8) + (shortlist rows) x dim x 8 B — the
+    exact tier is id-sorted within cid partitions so the vec_id IN (...)
+    pushdown prunes row groups below the partition level."""
+    n_vecs = corpus.count()
+    dim = len(corpus.select("embedding").first()[0])
+    exact = {
+        (r.query_id, r.neighbor_id)
+        for r in brute_force_topk(corpus, queries, k=K_NN).collect()
+    }
+    t0 = time.perf_counter()
+    build_ivf_centroid_index(corpus, idx_path, n_centroids=n_centroids)
+    wall_build = round(time.perf_counter() - t0, 2)
+    k_actual = spark.read.parquet(idx_path + "_centroids").count()
+    nprobe = probe.get("nprobe") or max(
+        1, math.ceil(probe["probe_frac"] * k_actual)
+    )
+    t0 = time.perf_counter()
+    got = {
+        (r.query_id, r.neighbor_id)
+        for r in ivf_centroid_topk(
+            spark, idx_path, queries, k=K_NN, **probe
+        ).collect()
+    }
+    wall_probe = round(time.perf_counter() - t0, 2)
+    coarse_rows = coarse_rows_per_query(spark, idx_path, queries, nprobe)
+    exact_rows = min(probe["rerank"], n_vecs)
+    bytes_read = coarse_rows * dim * 1 + exact_rows * dim * 8
+    return {
+        "n_centroids": k_actual,
+        "nprobe_effective": nprobe,
+        "rerank": probe["rerank"],
+        "vectors": n_vecs,
+        "wall_civf_build_sec": wall_build,
+        "wall_civf_probe_sec": wall_probe,
+        "recall_at_10": round(len(exact & got) / len(exact), 3),
+        "coarse_rows_read_frac_per_query": round(coarse_rows / n_vecs, 3),
+        "exact_rows_read_per_query": exact_rows,
+        "bytes_read_frac_per_query": round(
+            bytes_read / (n_vecs * dim * 8), 3
+        ),
+    }
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     ks = [int(a) for a in sys.argv[2:]] or [1, 3, 10]
@@ -101,199 +194,18 @@ def main() -> None:
         .localCheckpoint()
     )
 
-    # (replication, n_planes) runs: fixed n_planes=6 at every scale shows
-    # the batch-union saturation effect; the 10x corpus repeats with
-    # n_planes=9 to demonstrate the tuning rule the module docstring
-    # states (n_planes ~ log2(corpus/bucket_target))
-    for k, n_planes, radius in [(1, 6, 2), (3, 6, 2), (10, 6, 2), (10, 9, 2), (10, 9, 3)]:
-        if k not in ks:
-            continue
-        path = replicated_vectors(spark, sf_dir, k, out_root)
-        corpus = spark.read.parquet(path)
-        n_vecs = corpus.count()
-
-        t0 = time.perf_counter()
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(corpus, queries, k=K_NN).collect()
-        }
-        wall_brute = round(time.perf_counter() - t0, 2)
-
-        idx_path = os.path.join(out_root, f"ivf_x{k}_p{n_planes}")
-        t0 = time.perf_counter()
-        build_ivf_index(corpus, idx_path, n_planes=n_planes)
-        wall_build = round(time.perf_counter() - t0, 2)
-
-        t0 = time.perf_counter()
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_topk(
-                spark, idx_path, queries, k=K_NN, n_planes=n_planes,
-                probe_radius=radius,
-            ).collect()
-        }
-        wall_probe = round(time.perf_counter() - t0, 2)
-
-        recall = round(len(exact & got) / len(exact), 3)
-
-        # storage-pruning fractions: rows in probed buckets / corpus rows
-        # — the scale-invariant quantity the index exists for (wall at
-        # fixture scale is scheduling-bound). Reported per query (mean)
-        # AND for the batch union: a batch's Hamming balls overlap, so
-        # union pruning saturates when 2^n_planes is small relative to
-        # #queries x ball size — the measured argument for scaling
-        # n_planes with the corpus.
-        q_sigs = [
-            r[0]
-            for r in queries.select(
-                hyperplane_signature(
-                    _as_double(F.col("embedding")), n_planes, 64, seed="ivf"
-                )
-            ).collect()
-        ]
-        by_sig = {
-            r["sig"]: r["cnt"]
-            for r in spark.read.parquet(idx_path)
-            .groupBy("sig")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        union_probed: set[int] = set()
-        per_query_fracs = []
-        for s in q_sigs:
-            ball = set(hamming_ball(s, n_planes, radius))
-            union_probed.update(ball)
-            per_query_fracs.append(
-                sum(by_sig.get(b, 0) for b in ball) / n_vecs
-            )
-        n_read = sum(by_sig.get(b, 0) for b in union_probed)
-        print(
-            json.dumps(
-                {
-                    "probe": "ann",
-                    "replication": k,
-                    "n_planes": n_planes,
-                    "probe_radius": radius,
-                    "vectors": n_vecs,
-                    "wall_brute_sec": wall_brute,
-                    "wall_ivf_build_sec": wall_build,
-                    "wall_ivf_probe_sec": wall_probe,
-                    "recall_at_10": recall,
-                    "buckets_probed_union": len(union_probed),
-                    "rows_read_frac_per_query": round(
-                        sum(per_query_fracs) / len(per_query_fracs), 3
-                    ),
-                    "rows_read_frac_batch_union": round(n_read / n_vecs, 3),
-                }
-            ),
-            flush=True,
-        )
-
-    # --- two-tier centroid (k-means) IVF, round 10: the recall/read
-    # trade the hyperplane probe cannot reach on near-uniform data.
-    # Bytes accounting: the flat baseline reads n x dim x 8 B; the
-    # two-tier probe reads (coarse rows in probed partitions) x dim x
-    # 1 B (int8) + (shortlist rows) x dim x 8 B — the exact tier is
-    # id-sorted within cid partitions so the vec_id IN (...) pushdown
-    # prunes row groups below the partition level.
+    # --- two-tier centroid (k-means) IVF, round 10: fixed 16 centroids,
+    # nprobe 12, shortlist 30 — recall >= 0.9 at ~11 % of index bytes
     N_CENT, NPROBE, RERANK = 16, 12, 30
     for k in ks:
-        path = replicated_vectors(spark, sf_dir, k, out_root)
-        corpus = spark.read.parquet(path)
-        n_vecs = corpus.count()
-        dim = len(corpus.select("embedding").first()[0])
-
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(corpus, queries, k=K_NN).collect()
-        }
-        idx_path = os.path.join(out_root, f"civf_x{k}_c{N_CENT}")
-        t0 = time.perf_counter()
-        build_ivf_centroid_index(corpus, idx_path, n_centroids=N_CENT)
-        wall_build = round(time.perf_counter() - t0, 2)
-
-        t0 = time.perf_counter()
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_centroid_topk(
-                spark, idx_path, queries, k=K_NN, nprobe=NPROBE,
-                rerank=RERANK,
-            ).collect()
-        }
-        wall_probe = round(time.perf_counter() - t0, 2)
-        recall = round(len(exact & got) / len(exact), 3)
-
-        # read accounting mirrors the probe's own pruning: per query,
-        # rows in its nprobe nearest centroids' partitions (coarse tier)
-        # plus its <= RERANK shortlist rows (exact tier)
-        from hive_export_spark.operators.kmeans import _sq_l2
-
-        cents = spark.read.parquet(idx_path + "_centroids")
-        by_cid = {
-            r["cid"]: r["cnt"]
-            for r in spark.read.parquet(idx_path)
-            .groupBy("cid")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        # recompute the full nprobe set exactly as the probe does
-        from pyspark.sql import Window as W
-
-        qv = queries.select(
-            "query_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("__qv"),
+        corpus = spark.read.parquet(replicated_vectors(spark, sf_dir, k, out_root))
+        row = measure(
+            spark, corpus, queries,
+            os.path.join(out_root, f"civf_x{k}_c{N_CENT}"),
+            N_CENT, nprobe=NPROBE, rerank=RERANK,
         )
-        # bounded: cents is the n_centroids x dim trained centroid table
-        ranked = (
-            qv.crossJoin(F.broadcast(cents))
-            .select(
-                "query_id",
-                "cluster_id",
-                _sq_l2(
-                    F.col("__qv"),
-                    F.transform("centroid", lambda x: x.cast("double")),
-                ).alias("d2"),
-            )
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    W.partitionBy("query_id").orderBy("d2", "cluster_id")
-                ),
-            )
-            .filter(F.col("rk") <= NPROBE)
-            .collect()
-        )
-        per_q_coarse = {}
-        for r in ranked:
-            per_q_coarse.setdefault(r["query_id"], 0)
-            per_q_coarse[r["query_id"]] += by_cid.get(r["cluster_id"], 0)
-        coarse_rows = sum(per_q_coarse.values()) / len(per_q_coarse)
-        exact_rows = min(RERANK, n_vecs)
-        bytes_flat = n_vecs * dim * 8
-        bytes_read = coarse_rows * dim * 1 + exact_rows * dim * 8
-        print(
-            json.dumps(
-                {
-                    "probe": "ann_centroid",
-                    "replication": k,
-                    "n_centroids": N_CENT,
-                    "nprobe": NPROBE,
-                    "rerank": RERANK,
-                    "vectors": n_vecs,
-                    "wall_civf_build_sec": wall_build,
-                    "wall_civf_probe_sec": wall_probe,
-                    "recall_at_10": recall,
-                    "coarse_rows_read_frac_per_query": round(
-                        coarse_rows / n_vecs, 3
-                    ),
-                    "exact_rows_read_per_query": exact_rows,
-                    "bytes_read_frac_per_query": round(
-                        bytes_read / bytes_flat, 3
-                    ),
-                }
-            ),
-            flush=True,
-        )
+        print(json.dumps({"probe": "ann_centroid", "replication": k, **row}),
+              flush=True)
 
     # --- corpus-scaling rule receipt, round 11: with k derived as
     # ~sqrt(N) at build time (derive_n_centroids) and nprobe a fixed
@@ -302,10 +214,6 @@ def main() -> None:
     # while recall holds — the property that makes the layout transfer
     # to 100 TB. Sweep: derived k at 1x/3x/10x, plus fixed k=16 and a
     # 2x-derived k on the 10x corpus to isolate the k-axis.
-    import math
-
-    from hive_export_spark.operators.ivf import derive_n_centroids
-
     PROBE_FRAC, RERANK2 = 0.75, 30
     sweeps: list[tuple[int, int | None]] = [
         (1, None), (3, None), (10, None), (10, 16), (10, 0),
@@ -313,98 +221,23 @@ def main() -> None:
     for k, n_cent in sweeps:
         if k not in ks:
             continue
-        path = replicated_vectors(spark, sf_dir, k, out_root)
-        corpus = spark.read.parquet(path)
-        n_vecs = corpus.count()
-        dim = len(corpus.select("embedding").first()[0])
+        corpus = spark.read.parquet(replicated_vectors(spark, sf_dir, k, out_root))
         if n_cent == 0:  # the 2x-derived leg
-            n_cent = 2 * derive_n_centroids(n_vecs)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(corpus, queries, k=K_NN).collect()
-        }
+            n_cent = 2 * derive_n_centroids(corpus.count())
         tag = "drv" if n_cent is None else str(n_cent)
-        idx_path = os.path.join(out_root, f"civf_scale_x{k}_c{tag}")
-        t0 = time.perf_counter()
-        build_ivf_centroid_index(corpus, idx_path, n_centroids=n_cent)
-        wall_build = round(time.perf_counter() - t0, 2)
-        cents = spark.read.parquet(idx_path + "_centroids")
-        k_actual = cents.count()
-        nprobe_eff = max(1, math.ceil(PROBE_FRAC * k_actual))
-        t0 = time.perf_counter()
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_centroid_topk(
-                spark, idx_path, queries, k=K_NN,
-                probe_frac=PROBE_FRAC, rerank=RERANK2,
-            ).collect()
-        }
-        wall_probe = round(time.perf_counter() - t0, 2)
-        recall = round(len(exact & got) / len(exact), 3)
-
-        from hive_export_spark.operators.kmeans import _sq_l2
-        from pyspark.sql import Window as W
-
-        by_cid = {
-            r["cid"]: r["cnt"]
-            for r in spark.read.parquet(idx_path)
-            .groupBy("cid")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        qv = queries.select(
-            "query_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "__qv"
-            ),
+        row = measure(
+            spark, corpus, queries,
+            os.path.join(out_root, f"civf_scale_x{k}_c{tag}"),
+            n_cent, probe_frac=PROBE_FRAC, rerank=RERANK2,
         )
-        # bounded: cents is the k x dim trained centroid table
-        ranked = (
-            qv.crossJoin(F.broadcast(cents))
-            .select(
-                "query_id",
-                "cluster_id",
-                _sq_l2(
-                    F.col("__qv"),
-                    F.transform("centroid", lambda x: x.cast("double")),
-                ).alias("d2"),
-            )
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    W.partitionBy("query_id").orderBy("d2", "cluster_id")
-                ),
-            )
-            .filter(F.col("rk") <= nprobe_eff)
-            .collect()
-        )
-        per_q = {}
-        for r in ranked:
-            per_q.setdefault(r["query_id"], 0)
-            per_q[r["query_id"]] += by_cid.get(r["cluster_id"], 0)
-        coarse_rows = sum(per_q.values()) / len(per_q)
-        exact_rows = min(RERANK2, n_vecs)
-        bytes_read = coarse_rows * dim * 1 + exact_rows * dim * 8
         print(
             json.dumps(
                 {
                     "probe": "ann_centroid_scaling",
                     "replication": k,
-                    "n_centroids": k_actual,
                     "derived": tag == "drv",
                     "probe_frac": PROBE_FRAC,
-                    "nprobe_effective": nprobe_eff,
-                    "rerank": RERANK2,
-                    "vectors": n_vecs,
-                    "wall_civf_build_sec": wall_build,
-                    "wall_civf_probe_sec": wall_probe,
-                    "recall_at_10": recall,
-                    "coarse_rows_read_frac_per_query": round(
-                        coarse_rows / n_vecs, 3
-                    ),
-                    "bytes_read_frac_per_query": round(
-                        bytes_read / (n_vecs * dim * 8), 3
-                    ),
+                    **row,
                 }
             ),
             flush=True,

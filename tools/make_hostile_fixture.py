@@ -546,10 +546,9 @@ def build(src: str, out: str) -> None:
         # for every oracle built on them — while list_zip/zip_with pad
         # NULL identically on both engines. The class is therefore
         # oracle-inexpressible here and is guarded in production code
-        # instead: the modal-dimension probe reports dropped rows
-        # (operators/ml_lsh.py last_dim_probe) and the DQ gate's
-        # embeddings_dim_mismatch rule fires — both pinned on a
-        # constructed mixed-dim corpus in tests/test_round8_ops.py.
+        # instead: the DQ gate's embeddings_dim_mismatch rule fires —
+        # pinned on a constructed mixed-dim corpus in
+        # tests/test_round8_ops.py.
     ])
 
     for t in ("region", "nation", "supplier"):
