@@ -1134,7 +1134,16 @@ def _read_tombstones(
     ids — over- or early-hiding is impossible (the files hold exactly
     the requested ids) and the re-run completes it. The second element
     is the _TOMBSTONE_BROADCAST_MAX_BYTES verdict from one recursive
-    FS listing — metadata only, no Spark job."""
+    FS listing — metadata only, no Spark job. An index that never had
+    a delete has no tier: one ``exists`` call answers without a read."""
+    from hive_export_spark.operators.maintenance import (
+        _fs_for,
+        _total_bytes,
+    )
+
+    fs, jroot = _fs_for(spark, _deletes_path(index_path))
+    if not fs.exists(jroot):
+        return None, True
     try:
         tomb = (
             spark.read.option("recursiveFileLookup", "true")
@@ -1142,17 +1151,12 @@ def _read_tombstones(
             .select(id_col)
             .distinct()
         )
-    except AnalysisException:  # no tombstone tier / no data files
+    except AnalysisException:  # a tier holding no data files yet
         return None, True
-    from hive_export_spark.operators.maintenance import (
-        _fs_for,
-        _total_bytes,
-    )
 
     # one-call byte total (round-14): the budget doesn't need the
     # per-file marker filter, and markers over-count in the fail-safe
     # direction (the broadcast bound trips marginally earlier)
-    fs, jroot = _fs_for(spark, _deletes_path(index_path))
     tomb_bytes = _total_bytes(fs, jroot)
     return tomb, tomb_bytes <= _TOMBSTONE_BROADCAST_MAX_BYTES
 

@@ -176,11 +176,21 @@ def route_partitions(df: DataFrame, partition_cols: list[str]) -> DataFrame:
     The reference buffers rows into Multimap<HiveEndPoint, json>
     (StreamingHiveDecoder.java:44-54) then hashes endpoints across 4 writer
     threads (HiveSink.java:68). In Spark this IS the shuffle: repartition on
-    the partition columns so each task writes few files (avoids the
-    many-small-files problem at scale). With AQE on, skewed partition keys
-    are split automatically.
+    the partition columns, so each key lands in exactly one task and gets
+    one file per write.
+
+    The task count is explicit, ``spark.sql.shuffle.partitions``: AQE
+    coalesces a repartition by columns alone into partitions of at least
+    1 MB, so a small shuffle ran in one task that wrote every partition
+    file in turn. AQE leaves a repartition by number alone, so the write
+    runs that many tasks, as a stream's does (streaming turns AQE off).
+    No columns means an unpartitioned write: the frame is returned
+    unrouted.
     """
-    return df.repartition(*[F.col(c) for c in partition_cols])
+    if not partition_cols:
+        return df
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *[F.col(c) for c in partition_cols])
 
 
 def write_partitioned(

@@ -23,7 +23,9 @@ export source, HiveExportClient.java:129-135).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,16 +38,29 @@ from hive_export_spark.sources.jdbc import read_jdbc_auto, write_jdbc
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
+_SCRATCH_ROOTS: set[str] = set()
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    # a forked child inherits this handler; only the owner removes the tree
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def scratch_dir(name: str) -> str:
     """Deterministic per-process scratch path for connector round-trips.
 
     Repeated invocations of a registered query within one driver/bench
     session reuse (and overwrite) the same directory instead of leaking a
-    fresh ``mkdtemp`` tree per call.
+    fresh ``mkdtemp`` tree per call. The per-process root is removed
+    when the process exits.
     """
-    base = os.path.join(
-        tempfile.gettempdir(), f"hive_export_scratch_{os.getpid()}", name
-    )
+    pid = os.getpid()
+    root = os.path.join(tempfile.gettempdir(), f"hive_export_scratch_{pid}")
+    if root not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS.add(root)
+        atexit.register(_remove_scratch_root, root, pid)
+    base = os.path.join(root, name)
     os.makedirs(base, exist_ok=True)
     return base
 
@@ -66,7 +81,6 @@ def sf_scratch_dir(name: str, sf_dir: str) -> str:
     don't accumulate stale cache trees unboundedly.
     """
     import hashlib
-    import shutil
 
     # path-hash and content-hash are SEPARATE key segments: pruning
     # matches on (name, path-hash) so caches for different fixture roots
@@ -235,8 +249,6 @@ FROM orders
     "the oracle reconstructs exactly that null pattern from parquet.",
 )
 def fmt_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     base = scratch_dir("schema_evolution")
     shutil.rmtree(base, ignore_errors=True)
     o = load_table(spark, "orders", sf_dir).select(
@@ -279,8 +291,6 @@ FROM events GROUP BY event_type
     "lossless on the double payload.",
 )
 def source_export_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from hive_export_spark.sources.export_blocks import (
         register_export_blocks_source,
     )

@@ -19,7 +19,9 @@ Two legs, each printing one JSON line per config:
 Each records brute-force exact top-10 wall (the baseline that scans
 everything), index build wall (paid once at ingest), probe wall,
 recall@10 against the exact answer on the SAME corpus, and the per-query
-read fractions (coarse-tier rows and bytes).
+read fractions (coarse-tier rows and bytes). Corpora and indexes are
+built under ``$TMPDIR/hive_export_ann_probe/``, which is removed when the
+probe ends.
 
 Usage:  python tools/ann_probe.py [sf_dir] [replications ...]
         (defaults: /root/testdata/sf0.1, 1 3 10)
@@ -185,7 +187,13 @@ def main() -> None:
     spark = get_spark("ann-probe")
     spark.sparkContext.setLogLevel("ERROR")
     out_root = os.path.join(tempfile.gettempdir(), "hive_export_ann_probe")
+    try:
+        _probe(spark, sf_dir, ks, out_root)
+    finally:
+        shutil.rmtree(out_root, ignore_errors=True)
 
+
+def _probe(spark, sf_dir: str, ks: list[int], out_root: str) -> None:
     queries = (
         load_table(spark, "embeddings", sf_dir)
         .orderBy("vec_id")
