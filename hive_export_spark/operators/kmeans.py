@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_export_spark.operators.similarity import _as_double
+from hive_export_spark.operators.similarity import _as_double, _sql, _vector_expr
 from hive_export_spark.session import local_frame
 
 # the driver-held centroid matrix every k-means pass broadcasts
@@ -46,11 +46,11 @@ _CENTROID_SCHEMA = T.StructType(
 
 
 def _sq_l2(a, b) -> F.Column:
-    """Squared Euclidean distance, sequential left fold (deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    """Squared Euclidean distance, sequential left fold (deterministic),
+    built from one SQL string like the similarity helpers."""
+    return _vector_expr(
+        f"aggregate(zip_with({_sql(a)}, {_sql(b)}, (x, y) -> (x - y) * (x - y)),"
+        " 0D, (acc, x) -> acc + x)"
     )
 
 
@@ -80,16 +80,16 @@ def assign_clusters(
     embeddings) deterministically take the first cluster.
     """
     v = vectors.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("__v")
+        F.col(id_col), _as_double(vec_col).alias("__v")
     )
     c = centroids.select(
-        F.col(centroid_id_col), _as_double(F.col(centroid_vec_col)).alias("__c")
+        F.col(centroid_id_col), _as_double(centroid_vec_col).alias("__c")
     )
     # bounded: c is the k x dim centroid table (k clusters, not data-sized)
     scored = v.crossJoin(F.broadcast(c)).select(
         id_col,
         centroid_id_col,
-        _sq_l2(F.col("__v"), F.col("__c")).alias("dist2"),
+        _sq_l2("__v", "__c").alias("dist2"),
     )
     return (
         scored.groupBy(id_col)
@@ -118,7 +118,7 @@ def update_centroids(
     Returns (cluster_id, centroid array<double>, n_members).
     """
     joined = vectors.select(
-        id_col, _as_double(F.col(vec_col)).alias("__v")
+        id_col, _as_double(vec_col).alias("__v")
     ).join(assignment.select(id_col, "cluster_id"), id_col)
     dims = joined.select(
         "cluster_id", F.posexplode("__v").alias("dim", "val")
@@ -287,6 +287,7 @@ class KMeansResult:
     sse_history: list[float]  # total within-cluster SSE per iteration
     iterations: int
     converged: bool
+    training: DataFrame  # the cached, double-cast vectors both frames read
 
 
 def kmeans_fit(
@@ -322,7 +323,7 @@ def kmeans_fit(
     """
     spark = vectors.sparkSession
     v = vectors.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)
+        F.col(id_col), _as_double(vec_col).alias(vec_col)
     ).cache()
     if init not in ("auto", "hash", "parallel"):
         raise ValueError(f"unknown kmeans init {init!r}")
@@ -387,4 +388,5 @@ def kmeans_fit(
         sse_history=sse_history,
         iterations=it,
         converged=converged,
+        training=v,
     )

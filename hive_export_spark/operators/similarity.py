@@ -15,18 +15,70 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _as_double(vec):
-    return F.transform(vec, lambda x: x.cast("double"))
+def _sql(c) -> str:
+    """SQL text of a vector argument: a column name, a plain column
+    reference (``F.col``), or the result of a helper below.
 
-
-def dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    A name is backquoted part by dotted part, the way ``F.col`` reads it
+    (a name that already holds backquotes is used as written); a
+    reference's name parts are quoted the same way; a helper's result
+    nests as the SQL text it was built from. Any other Column raises:
+    Spark does not promise that a Column's printed form parses back."""
+    if isinstance(c, str):
+        if "`" in c:
+            return c
+        return _quote_parts(c.split("."))
+    # vars(), not getattr: a Column reads an unknown attribute as a field
+    text = vars(c).get("_vector_sql")
+    if text is not None:
+        return text
+    node = c._jc.node()
+    if node.getClass().getSimpleName() == "UnresolvedAttribute":
+        parts = node.nameParts()
+        return _quote_parts(parts.apply(i) for i in range(parts.size()))
+    raise TypeError(
+        "vector helpers take a column name, F.col(name) or another vector "
+        f"helper's result, not {c!r}; select the expression under a name "
+        "first"
     )
 
 
+def _quote_parts(parts) -> str:
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+# Each helper builds its expression from ONE SQL string (one py4j call)
+# instead of PySpark's lambda builder, which costs a JVM round trip per
+# lambda variable and operator. The folds are the same expressions in the
+# same order: a left fold from a double 0 (``0D``) in slot order.
+
+
+def _vector_expr(text: str) -> F.Column:
+    """``F.expr(text)``, carrying ``text`` so that another helper can
+    nest it (see _sql)."""
+    col = F.expr(text)
+    col._vector_sql = text
+    return col
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _l2_norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
+
+
+def _as_double(vec) -> F.Column:
+    return _vector_expr(f"transform({_sql(vec)}, x -> CAST(x AS DOUBLE))")
+
+
+def dot(a, b) -> F.Column:
+    return _vector_expr(_dot_sql(_sql(a), _sql(b)))
+
+
 def l2_norm(a) -> F.Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    return _vector_expr(_l2_norm_sql(_sql(a)))
 
 
 def cosine(a, b) -> F.Column:
@@ -37,7 +89,10 @@ def cosine(a, b) -> F.Column:
     embedding jobs). NULL matches DuckDB's x/0 semantics, and a NULL
     cosine naturally drops out of >= / top-k comparisons on both
     engines — the pinned convention (round-6 hostile-fixture sweep)."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    a, b = _sql(a), _sql(b)
+    return _vector_expr(
+        f"try_divide({_dot_sql(a, b)}, {_l2_norm_sql(a)} * {_l2_norm_sql(b)})"
+    )
 
 
 def brute_force_topk(
@@ -64,18 +119,18 @@ def brute_force_topk(
     # so the scores are bit-identical.
     q = queries.select(
         F.col(query_id_col),
-        _as_double(F.col(vec_col)).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
+        _as_double(vec_col).alias("__qv"),
+    ).withColumn("__qn", l2_norm("__qv"))
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__vv"),
-    ).withColumn("__vn", l2_norm(F.col("__vv")))
+        _as_double(vec_col).alias("__vv"),
+    ).withColumn("__vn", l2_norm("__vv"))
     # bounded: q is the query set — small by contract (broadcast queries x partitioned corpus)
     scored = v.crossJoin(F.broadcast(q)).select(
         query_id_col,
         "neighbor_id",
         F.try_divide(
-            dot(F.col("__qv"), F.col("__vv")),
+            dot("__qv", "__vv"),
             F.col("__qn") * F.col("__vn"),
         ).alias("cosine"),
     )
@@ -152,7 +207,7 @@ def embedding_near_dup_pairs(
         raise ValueError(f"n_planes ({n_planes}) not divisible by {band_size}")
     v = vectors.select(
         F.col(id_col).alias("vid"),
-        _as_double(F.col(vec_col)).alias("__v"),
+        _as_double(vec_col).alias("__v"),
     ).withColumn(
         "__sig", hyperplane_signature(F.col("__v"), n_planes, dim, seed="nd")
     )
@@ -190,7 +245,7 @@ def embedding_near_dup_pairs(
     return (
         candidates.join(va, "vec_a")
         .join(vb, "vec_b")
-        .withColumn("cosine", cosine(F.col("__va"), F.col("__vb")))
+        .withColumn("cosine", cosine("__va", "__vb"))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )

@@ -205,7 +205,7 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle-twin: vb is the FULL embeddings table — deliberate fixture-scale exact all-pairs recall oracle; the production path is similarity.embedding_near_dup_pairs (banded LSH, sub-quadratic)
         va.crossJoin(F.broadcast(vb))
         .filter(F.col("va") < F.col("vb"))
-        .filter(similarity.cosine(F.col("__xa"), F.col("__xb")) >= 0.45)
+        .filter(similarity.cosine("__xa", "__xb") >= 0.45)
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
     # bounded: two 1-row count aggregates (exact vs recovered pair counts)

@@ -49,7 +49,10 @@ from hive_export_spark.operators.ivf import (  # noqa: E402
     ivf_centroid_topk,
 )
 from hive_export_spark.operators.kmeans import _sq_l2  # noqa: E402
-from hive_export_spark.operators.similarity import brute_force_topk  # noqa: E402
+from hive_export_spark.operators.similarity import (  # noqa: E402
+    _as_double,
+    brute_force_topk,
+)
 from hive_export_spark.session import get_spark  # noqa: E402
 from hive_export_spark.sources import load_table  # noqa: E402
 
@@ -104,7 +107,7 @@ def coarse_rows_per_query(spark, idx_path: str, queries, nprobe: int) -> float:
     }
     qv = queries.select(
         "query_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("__qv"),
+        _as_double("embedding").alias("__qv"),
     )
     # bounded: cents is the n_centroids x dim trained centroid table
     ranked = (
@@ -112,10 +115,7 @@ def coarse_rows_per_query(spark, idx_path: str, queries, nprobe: int) -> float:
         .select(
             "query_id",
             "cluster_id",
-            _sq_l2(
-                F.col("__qv"),
-                F.transform("centroid", lambda x: x.cast("double")),
-            ).alias("d2"),
+            _sq_l2("__qv", _as_double("centroid")).alias("d2"),
         )
         .withColumn(
             "rk",
