@@ -30,8 +30,7 @@ HEADLINE = [
     "q5_local_supplier_volume",
     "topk_per_group",
     "join_asof",
-    # windows + streaming semantics
-    "window_running_sum",
+    # streaming semantics
     "stream_tumbling_window",
     "stream_session_window",
     # LLM-pipeline
@@ -60,11 +59,9 @@ HEADLINE = [
     # convention as llm_dedup_incremental_banded below)
     "llm_sim_ivf_incremental",
     # round-5 structural analytics: degree-oriented triangle counting
-    # (wedge-join heavy), two-phase skyline (local prune + sweep), and
-    # the scatter-reduce EWMA kernel
+    # (wedge-join heavy) and two-phase skyline (local prune + sweep)
     "graph_triangle_count",
     "pareto_skyline",
-    "ts_ewma_window",
     "graph_pagerank",
     # the custom connector's Arrow batch decode path (round-4 verdict ask)
     "source_export_blocks",

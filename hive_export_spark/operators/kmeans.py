@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -321,67 +322,73 @@ def kmeans_fit(
     monotonically non-increasing under exact arithmetic; per-iteration
     driver traffic is the k x dim centroid matrix + one scalar.
     """
-    spark = vectors.sparkSession
-    v = vectors.select(
-        F.col(id_col), _as_double(vec_col).alias(vec_col)
-    ).cache()
     if init not in ("auto", "hash", "parallel"):
         raise ValueError(f"unknown kmeans init {init!r}")
-    use_parallel = init == "parallel" or (init == "auto" and k > 128)
-    if use_parallel:
-        centroid_rows = _parallel_init_rows(
-            spark, v, k, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        init_df = (
-            v.withColumn("__h", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__h", id_col)
-            .limit(k)
-            .select(
-                F.row_number()
-                .over(Window.orderBy("__h", id_col))
-                .cast("long")
-                .alias("cluster_id"),
-                F.col(vec_col).alias("centroid"),
+    spark = vectors.sparkSession
+    v = vectors.select(F.col(id_col), _as_double(vec_col).alias(vec_col))
+    # a failed fit releases only a cache entry it added: an earlier fit's
+    # training frame is the same plan and stays its owner's
+    owns_cache = v.storageLevel == StorageLevel.NONE
+    v = v.cache()
+    try:
+        use_parallel = init == "parallel" or (init == "auto" and k > 128)
+        if use_parallel:
+            centroid_rows = _parallel_init_rows(
+                spark, v, k, id_col=id_col, vec_col=vec_col
             )
+        else:
+            init_df = (
+                v.withColumn("__h", F.md5(F.col(id_col).cast("string")))
+                .orderBy("__h", id_col)
+                .limit(k)
+                .select(
+                    F.row_number()
+                    .over(Window.orderBy("__h", id_col))
+                    .cast("long")
+                    .alias("cluster_id"),
+                    F.col(vec_col).alias("centroid"),
+                )
+            )
+            # k x dim doubles: the bounded driver exchange (same contract as
+            # the IVF probe collect); re-created as a literal DataFrame each
+            # round so iteration N+1's plan does not stack N prior joins
+            centroid_rows = [
+                (r["cluster_id"], list(r["centroid"])) for r in init_df.collect()
+            ]
+        sse_history: list[float] = []
+        assignment = None
+        converged = False
+        it = 0
+        for it in range(1, max_iter + 1):
+            centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
+            assignment = assign_clusters(
+                v, centroids, id_col=id_col, vec_col=vec_col
+            )
+            sse = assignment.agg(F.sum("dist2")).collect()[0][0] or 0.0
+            sse_history.append(float(sse))
+            if len(sse_history) > 1:
+                prev = sse_history[-2]
+                if prev == 0.0 or (prev - sse) / prev < tol:
+                    converged = True
+                    break
+            new_cent = update_centroids(
+                v, assignment, id_col=id_col, vec_col=vec_col
+            )
+            centroid_rows = [
+                (r["cluster_id"], list(r["centroid"]))
+                for r in new_cent.collect()
+            ]
+            # an empty cluster drops out, so fewer than k rows may come back:
+            # k-means proper keeps k fixed by re-seeding; for curation a
+            # shrunken k is fine
+        final_centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
+        sizes = assignment.groupBy("cluster_id").agg(
+            F.count(F.lit(1)).alias("n_members")
         )
-        # k x dim doubles: the bounded driver exchange (same contract as
-        # the IVF probe collect); re-created as a literal DataFrame each
-        # round so iteration N+1's plan does not stack N prior joins
-        centroid_rows = [
-            (r["cluster_id"], list(r["centroid"])) for r in init_df.collect()
-        ]
-    sse_history: list[float] = []
-    assignment = None
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
-        assignment = assign_clusters(
-            v, centroids, id_col=id_col, vec_col=vec_col
-        )
-        sse = assignment.agg(F.sum("dist2")).collect()[0][0] or 0.0
-        sse_history.append(float(sse))
-        if len(sse_history) > 1:
-            prev = sse_history[-2]
-            if prev == 0.0 or (prev - sse) / prev < tol:
-                converged = True
-                break
-        new_cent = update_centroids(
-            v, assignment, id_col=id_col, vec_col=vec_col
-        )
-        centroid_rows = [
-            (r["cluster_id"], list(r["centroid"]))
-            for r in new_cent.collect()
-        ]
-        if len(centroid_rows) < k:
-            # empty cluster: k-means proper keeps k fixed by re-seeding;
-            # for curation use a shrunken k is fine — document, proceed
-            pass
-    final_centroids = local_frame(spark, centroid_rows, _CENTROID_SCHEMA)
-    sizes = assignment.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
+    except BaseException:
+        if owns_cache:
+            v.unpersist()
+        raise
     return KMeansResult(
         centroids=final_centroids.join(sizes, "cluster_id", "left"),
         assignment=assignment,

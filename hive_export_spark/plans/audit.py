@@ -19,12 +19,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def explain_formatted(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def has_pushed_filters(df: DataFrame, *fragments: str) -> bool:
     """True if the scan node advertises PushedFilters containing every
     fragment (e.g. column names of pushed predicates)."""

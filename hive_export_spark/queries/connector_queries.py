@@ -190,8 +190,8 @@ FROM lineitem, (VALUES ('orc'), ('csv'), ('json')) AS f(fmt)
 """,
     doc="ORC + CSV + JSON write/read-back fidelity: one leg per format, "
     "tagged and unioned; hash-compared against the parquet source. "
-    "Superseded in the driver window by the per-format fmt_roundtrip_* "
-    "probes, kept registered for the combined-union shape.",
+    "The per-format fmt_roundtrip_* probes check each leg alone; this "
+    "one is kept for the combined-union shape.",
 )
 def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     legs = [

@@ -1,6 +1,6 @@
 """Invariant tests for the structural-analytics operators (graph
-triangle count, Pareto skyline, windowed distinct, EWMA kernel,
-surprisal scoring, weighted sampling)."""
+triangle count, Pareto skyline, windowed distinct, surprisal scoring,
+weighted sampling)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from hive_export_spark.operators.graph import cooccurrence_edges, triangle_count
 from hive_export_spark.operators.skyline import skyline_2d
-from hive_export_spark.queries.timeseries_queries import _EWMA_ALPHA, _EWMA_W
 
 
 def _brute_triangles(edges: set[tuple[int, int]]) -> int:
@@ -104,14 +103,6 @@ def test_skyline_local_prune_is_superset_safe(spark):
         for r in skyline_2d(df.repartition(7, "size"), "price", "size").collect()
     )
     assert a == b == sorted(p[0] for p in _brute_skyline(pts))
-
-
-def test_ewma_weights_are_quantized_kernel():
-    # the shared integer table must match the float kernel to 1e-9 and be
-    # strictly decreasing (alpha in (0,1))
-    for k, w in enumerate(_EWMA_W):
-        assert abs(w / 1e9 - _EWMA_ALPHA * (1 - _EWMA_ALPHA) ** k) < 1e-9
-    assert all(a > b for a, b in zip(_EWMA_W, _EWMA_W[1:]))
 
 
 def test_running_distinct_never_decreases(spark, sf_dir):
@@ -228,35 +219,6 @@ def test_apply_changelog_tombstones_and_latest_wins(spark):
     assert got == {1: ("U", 20.0), 3: ("I", 7.0)}
 
 
-def test_cusum_changepoint_finds_injected_shift(spark):
-    # synthetic series with a level shift at position 30 of 60
-    import pyspark.sql.functions as SF
-
-    from hive_export_spark.queries.timeseries_queries import ts_cusum_changepoint  # noqa: F401  (registry import only)
-
-    rows = [(i, 10.0 if i < 30 else 50.0) for i in range(60)]
-    df = spark.createDataFrame(rows, "k long, v double")
-    from pyspark.sql import Window as W
-
-    w_run = W.orderBy("k").rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_all = W.partitionBy()
-    ranked = df.select(
-        "k",
-        SF.sum("v").over(w_run).alias("r"),
-        SF.row_number().over(W.orderBy("k")).alias("rn"),
-        SF.count(SF.lit(1)).over(w_all).alias("n"),
-        SF.sum("v").over(w_all).alias("s"),
-    )
-    score = SF.col("n") * SF.col("r") - SF.col("rn") * SF.col("s")
-    pick = (
-        ranked.withColumn("sc", SF.abs(score))
-        .orderBy(SF.col("sc").desc(), "k")
-        .limit(1)
-        .collect()[0]
-    )
-    assert pick.k == 29  # the last pre-shift bucket maximizes |CUSUM|
-
-
 def test_mixture_sampling_tracks_target_weights(spark, sf_dir):
     from hive_export_spark.queries.llm_queries import llm_sample_mixture
 
@@ -293,47 +255,6 @@ def test_embed_quantize_error_bound_holds(spark, sf_dir):
     assert all(r.err_ok for r in rows)  # absmax quantization bound
     assert all(0 < r.scale_r for r in rows)
     assert all(0 < r.nnz <= r.n_dims for r in rows)
-
-
-def test_seasonal_idx_averages_to_one(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import ts_seasonal_profile
-
-    rows = ts_seasonal_profile(spark, sf_dir).collect()
-    from hive_export_spark.sources import load_table
-
-    series_mean = {
-        r.event_type: r.m
-        for r in load_table(spark, "events", sf_dir)
-        .groupBy("event_type")
-        .agg(F.avg("value").alias("m"))
-        .collect()
-    }
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r.event_type, []).append((r.n, r.mean_v, r.seasonal_idx))
-    for t, vals in by_type.items():
-        n_tot = sum(n for n, _, _ in vals)
-        # weighted mean of hourly means reconstructs the series mean
-        wmean = sum(n * m for n, m, _ in vals) / n_tot
-        assert abs(wmean - series_mean[t]) < 1e-4
-        # count-weighted mean of the seasonal indices is 1
-        widx = sum(n * i for n, _, i in vals) / n_tot
-        assert abs(widx - 1) < 1e-3
-
-
-def test_attribution_click_precedes_purchase(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import (
-        ts_attribution_last_touch,
-    )
-
-    rows = ts_attribution_last_touch(spark, sf_dir).collect()
-    assert rows
-    attributed = [r for r in rows if r.click_id is not None]
-    assert attributed  # the fixture has clicks before purchases
-    assert all(r.secs_since_click >= 0 for r in attributed)
-    assert all(
-        r.secs_since_click is None for r in rows if r.click_id is None
-    )
 
 
 def test_null_safe_join_buckets_nulls(spark, sf_dir):
@@ -404,16 +325,6 @@ def test_chi2_is_nonnegative_with_expected_dof(spark, sf_dir):
     assert row.n > 0
 
 
-def test_delta_rate_consistency(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import ts_delta_rate
-
-    rows = ts_delta_rate(spark, sf_dir).collect()
-    assert rows
-    for r in rows[:500]:
-        assert r.dt_s > 0
-        assert abs(r.rate_per_s - r.delta / r.dt_s) < 1e-5
-
-
 def test_nearest_value_join_matches_bruteforce(spark):
     from hive_export_spark.operators.relational import nearest_value_join
 
@@ -447,15 +358,6 @@ def test_ks_drift_bounds(spark, sf_dir):
     assert r.d_stat < 0.2
 
 
-def test_autocorrelation_in_range_and_decaying_shape(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import ts_autocorrelation
-
-    rows = ts_autocorrelation(spark, sf_dir).collect()
-    assert len(rows) == 15  # 5 series x 3 lags
-    assert all(-1 <= r.acf <= 1 for r in rows)
-    assert all(r.n > 0 for r in rows)
-
-
 def test_linear_fit_recovers_known_slope(spark):
     # y = 3 + 2t exactly -> slope 2, intercept 3, forecasts exact
     import pyspark.sql.functions as SF
@@ -474,13 +376,3 @@ def test_linear_fit_recovers_known_slope(spark):
     intercept = (sv - slope * st) / n
     assert abs(slope - 2.0) < 1e-9
     assert abs(intercept - 3.0) < 1e-9
-
-
-def test_bollinger_bands_bracket_the_series(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import ts_bollinger_bands
-
-    rows = ts_bollinger_bands(spark, sf_dir).collect()
-    assert rows
-    for r in rows[:1000]:
-        assert r.lower_band <= r.mid <= r.upper_band
-        assert 1 <= r.n_window <= 20

@@ -48,13 +48,11 @@ PINNED = [
     "llm_embedding_label_drift",
     # interaction neighbors that must STAY green (each touches several
     # laced classes at once): the DQ gate sees duplicate PKs and NULL
-    # payloads together; dedup sees the NULL-text duplicate pair; the
-    # funnel/sessionize walk the frozen series' pre-epoch rows; skyline
+    # payloads together; dedup sees the NULL-text duplicate pair; skyline
     # ranks rows with nothing to dominate
     "scale_dq_checks",
     "llm_dedup_exact",
     "llm_dedup_minhash_lsh",
-    "ts_sessionize_batch",
     "stats_welch_ttest",
     "pareto_skyline",
     "join_nearest_value",

@@ -174,8 +174,6 @@ def test_dedup_all_identical_docs(constant_dir, spark):
         "stats_zscore_outliers",
         "stats_welch_ttest",
         "stats_mann_whitney_u",
-        "ts_autocorrelation",
-        "ts_rolling_corr",
         "stats_gini_concentration",
     ],
 )

@@ -31,9 +31,8 @@ from hive_export_spark.registry import all_oracles, all_queries  # noqa: E402
 from hive_export_spark.sources import TABLE_NAMES  # noqa: E402
 
 PINNED = [
-    # ANSI crash class: n-1 = 0 sample variance / zero t-variance slope
+    # ANSI crash class: n-1 = 0 sample variance
     "stats_welch_ttest",
-    "ts_linear_forecast",
     # watermark: the duplicate must be BELOW the watermark on every
     # fixture (sentinel phase precedes the late injection)
     "stream_watermark_late_drop",

@@ -41,7 +41,6 @@ PINNED = [
     # convention-divergence class: NULL rank order, round() ties,
     # accent-folding map
     "stats_bootstrap_poisson",
-    "ts_interpolate_linear",
     "llm_text_normalize",
     # domain-edge class: sub-unit price first digit
     "stats_benford_first_digit",
@@ -61,15 +60,9 @@ PINNED = [
     # [ \t\n\x0B\f\r]+ (llm_queries._SQL_WS); token_stats' negated
     # punct class additionally spells out \x0B\f
     "llm_text_token_stats",
-    # round-7 zero-timespan series (4 rows, one timestamp) + negative
-    # values + degenerate JSON roots ("", "null", "[]"): classes held
-    # with no code change — pinned so they stay held
-    "ts_delta_rate",
+    # round-7 degenerate JSON roots ("", "null", "[]"): class held
+    # with no code change — pinned so it stays held
     "fn_json_family",
-    # round-7 wave 5: zero-sum series (offsetting charge/refund pairs)
-    # zeroes a series mean — seasonal-index division pins NULL via
-    # try_divide/nullif instead of ANSI crash (Spark) vs inf (DuckDB)
-    "ts_seasonal_profile",
     # round-7 wave 5: exact-duplicate document row (at-least-once
     # upstream writer) — dedup/count/canonical paths must treat the
     # pair identically on both engines
@@ -88,17 +81,14 @@ PINNED = [
     # rows from the same rebuilt fixture
     # round-7 wave 7: NULL foreign/grouping keys (anonymous events,
     # guest-checkout order, orphan lineitem, NULL-nation customer).
-    # Three finds, each its own convention pin:
+    # The finds still reached by a registered query, each its own
+    # convention pin:
     # to_json emits NULL struct fields (ignoreNullFields=false, matches
     # DuckDB + reference R5 encoder):
     # -> fn_json_family, already pinned above
     # shard splits must be TOTAL (bare `key % 2 == k` drops NULL keys
     # from every shard):
     "stream_union_sources",
-    # identity-required analytics filter anonymous rows EXPLICITLY on
-    # both engines (window partitionBy keeps a NULL pseudo-group where
-    # an oracle equi-join silently drops it):
-    "ts_retention_cohorts",
     # held with no change: NULL-key outer-join row preservation
     # (NULL o_custkey survives FULL with NULL customer columns, matches
     # nothing in inner/semi; orphan lineitem surfaces in anti)
@@ -106,7 +96,7 @@ PINNED = [
     # round-7 wave 8: clock corruption (epoch-zero / pre-epoch / 2038
     # rollover), sentinel 9999-12-31 dates, at-least-once duplicate
     # delivery, empty-string keys, duplicate-key dimension rows.
-    # Six pins, one per find:
+    # One pin per find still reached by a registered query:
     # calendar arithmetic beyond year 9999 -> NULL on both engines
     # (JVM computes year 10000 fine; Python datetime cannot collect it):
     "fn_date_family",
@@ -123,9 +113,6 @@ PINNED = [
     # blank partition values sentinel-encode before partitionBy ('' ->
     # __HIVE_DEFAULT_PARTITION__ -> NULL round-trip merges ''/NULL):
     "scale_compaction",
-    # time buckets floor on BOTH sides (DuckDB // truncates toward
-    # zero, off-by-one-bucket for negative epochs):
-    "ts_rollup_two_level",
     # the quarantine-first DQ gate, POSITIVE-fire test: the laced
     # corruption (NULL embedding, orphan lineitem, duplicate-custkey
     # SCD pair) must be CAUGHT (passed=false with matching violation

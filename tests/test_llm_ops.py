@@ -323,6 +323,63 @@ def test_kmeans_fit_converges_and_sse_monotone(spark, sf_dir):
     assert res.iterations <= 8
 
 
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _toy_vectors(spark, offset: float):
+    # a literal relation whose rows no other test builds, so its plan
+    # matches no cache entry the session already holds
+    from pyspark.sql import types as T
+
+    from hive_export_spark.session import local_frame
+
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+    ])
+    rows = [(i, [offset + i, float(i % 3)]) for i in range(12)]
+    return local_frame(spark, rows, schema)
+
+
+def test_kmeans_fit_bad_init_caches_nothing(spark):
+    from hive_export_spark.operators.kmeans import kmeans_fit
+
+    before = _cached_entries(spark)
+    with pytest.raises(ValueError, match="unknown kmeans init"):
+        kmeans_fit(_toy_vectors(spark, 0.25), k=2, init="nope")
+    assert _cached_entries(spark) == before
+
+
+def test_kmeans_fit_releases_only_its_own_cache_when_lloyd_raises(
+    spark, monkeypatch
+):
+    from pyspark import StorageLevel
+
+    from hive_export_spark.operators import kmeans
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("assignment failed")
+
+    vecs = _toy_vectors(spark, 0.5)
+    before = _cached_entries(spark)
+    with monkeypatch.context() as m:
+        m.setattr(kmeans, "assign_clusters", fail)
+        with pytest.raises(RuntimeError, match="assignment failed"):
+            kmeans.kmeans_fit(vecs, k=2, max_iter=2)
+    assert _cached_entries(spark) == before
+    # a fitted model's training frame is the same plan: a failed refit
+    # must leave it cached
+    fitted = kmeans.kmeans_fit(vecs, k=2, max_iter=2)
+    with monkeypatch.context() as m:
+        m.setattr(kmeans, "assign_clusters", fail)
+        with pytest.raises(RuntimeError, match="assignment failed"):
+            kmeans.kmeans_fit(vecs, k=2, max_iter=2)
+    assert fitted.training.storageLevel != StorageLevel.NONE
+    fitted.training.unpersist()
+    assert _cached_entries(spark) == before
+
+
 def test_kmeans_assignment_is_deterministic(spark, sf_dir):
     from hive_export_spark.operators.kmeans import assign_clusters
 

@@ -277,15 +277,6 @@ def test_weighted_sample_uses_tree_topk(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_attribution_single_user_shuffle(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import (
-        ts_attribution_last_touch,
-    )
-
-    plan = audit.executed_plan(ts_attribution_last_touch(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
 def test_partition_discovery_filter_becomes_partition_filter(spark, sf_dir):
     """The event_type predicate must prune DIRECTORIES (PartitionFilters),
     not rows (PushedFilters/DataFilters)."""

@@ -1,6 +1,6 @@
 """Round-14 wave-3 operators: exact substring (token-run) dedup,
-label-propagation communities, Holt linear smoothing, Mann-Kendall
-trend, Theil-Sen slope.
+label-propagation communities, containment dedup, bounded harmonic
+centrality.
 
 Each test pins the SEMANTICS on a hand-computable micro-case — the
 oracle gate already proves cross-engine agreement at fixture scale, so
@@ -9,8 +9,6 @@ answer together.
 """
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
 
 from hive_export_spark.operators.dedup import duplicate_token_spans
 from hive_export_spark.operators.graph import label_propagation
@@ -88,114 +86,6 @@ def test_label_propagation_tie_breaks_to_min_label(spark):
         r["node"]: r["label"] for r in label_propagation(edges, 1).collect()
     }
     assert got[3] == 1
-
-
-def test_holt_linear_matches_hand_rolled_recurrence(spark, sf_dir):
-    from hive_export_spark.queries.timeseries_queries import ts_holt_linear
-
-    rows = ts_holt_linear(spark, sf_dir).collect()
-    assert rows, "fixture must yield at least one user series"
-    byu = {r["user_id"]: r for r in rows}
-
-    # recompute one user's series with a plain python loop
-    from hive_export_spark.queries.timeseries_queries import _SPINE_HI, _SPINE_LO
-    from hive_export_spark.sources import load_table
-
-    uid = sorted(byu)[0]
-    daily = (
-        load_table(spark, "events", sf_dir)
-        .filter(
-            (F.col("ts") >= F.lit(_SPINE_LO).cast("timestamp"))
-            & (F.col("ts") < F.lit(_SPINE_HI).cast("timestamp"))
-            & F.col("value").isNotNull()
-            & (F.col("user_id") == uid)
-        )
-        .groupBy(F.floor(F.unix_timestamp("ts") / 86400).alias("d"))
-        .agg(F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("x"))
-        .orderBy("d")
-        .collect()
-    )
-    xs = [r["x"] for r in daily]
-    assert len(xs) == byu[uid]["n_obs"]
-    lvl, trd = xs[0], xs[1] - xs[0]
-    for x in xs[2:]:
-        new_l = 0.5 * x + 0.5 * (lvl + trd)
-        trd = 0.3 * (new_l - lvl) + 0.7 * trd
-        lvl = new_l
-    assert byu[uid]["level"] == lvl
-    assert byu[uid]["trend"] == trd
-    assert byu[uid]["forecast_3"] == lvl + 3.0 * trd
-
-
-def _events_dir(spark, tmp, rows):
-    import os
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.write.mode("overwrite").parquet(os.path.join(tmp, "events.parquet"))
-    return tmp
-
-
-def test_mann_kendall_monotone_series_is_increasing(spark):
-    import tempfile
-
-    from hive_export_spark.queries.timeseries_queries import ts_mann_kendall
-
-    with tempfile.TemporaryDirectory() as tmp:
-        rows = [
-            (i, f"2024-01-{i + 1:02d} 12:00:00", 1, "click", float(i), "{}")
-            for i in range(10)
-        ]
-        r = {
-            row["event_type"]: row
-            for row in ts_mann_kendall(spark, _events_dir(spark, tmp, rows)).collect()
-        }["click"]
-        assert r["n_obs"] == 10
-        assert r["s_stat"] == 45  # all 45 ordered pairs ascend
-        assert r["var_s"] == 125.0  # 10*9*25/18, no ties
-        assert r["trend"] == "increasing"
-
-
-def test_mann_kendall_constant_series_is_no_trend(spark):
-    import tempfile
-
-    from hive_export_spark.queries.timeseries_queries import ts_mann_kendall
-
-    with tempfile.TemporaryDirectory() as tmp:
-        rows = [
-            (i, f"2024-01-{i + 1:02d} 12:00:00", 1, "view", 7.0, "{}")
-            for i in range(6)
-        ]
-        r = ts_mann_kendall(spark, _events_dir(spark, tmp, rows)).collect()[0]
-        # all tied: S = 0 short-circuits z to 0.0 before the 0/0
-        assert r["s_stat"] == 0
-        assert r["z_stat"] == 0.0
-        assert r["trend"] == "no_trend"
-
-
-def test_theil_sen_ignores_outlier_day(spark):
-    import tempfile
-
-    from hive_export_spark.queries.timeseries_queries import ts_theil_sen
-
-    with tempfile.TemporaryDirectory() as tmp:
-        # ten days on x = 2*day + 5, one wildly-off day: the median of
-        # pairwise slopes (45 clean pairs of 55) must still be exactly 2
-        rows = []
-        for i in range(10):
-            day_epoch = (19723 + i)  # 2024-01-(1+i) UTC
-            rows.append(
-                (i, f"2024-01-{i + 1:02d} 00:00:00", 1, "click",
-                 2.0 * day_epoch + 5.0, "{}")
-            )
-        rows.append((99, "2024-01-20 00:00:00", 1, "click", 1e6, "{}"))
-        r = ts_theil_sen(spark, _events_dir(spark, tmp, rows)).collect()[0]
-        assert r["n_obs"] == 11 and r["n_pairs"] == 55
-        assert r["slope"] == 2.0
-        assert r["intercept"] == 5.0
 
 
 def test_containment_catches_subset_doc_jaccard_misses(spark):

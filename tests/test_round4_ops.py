@@ -157,26 +157,6 @@ def test_global_shuffle_is_permutation(spark):
     assert len({r.doc_id for r in rows}) == n
 
 
-def test_m4_envelope_invariants(spark):
-    """Every M4 bucket satisfies min <= first,last <= max and counts
-    match the raw bucket populations."""
-    from hive_export_spark.queries.timeseries_queries import ts_downsample_m4
-
-    out = ts_downsample_m4(spark, "/root/testdata/sf0.001")
-    bad = out.filter(
-        (F.col("v_min") > F.col("v_first"))
-        | (F.col("v_min") > F.col("v_last"))
-        | (F.col("v_max") < F.col("v_first"))
-        | (F.col("v_max") < F.col("v_last"))
-        | (F.col("n_points") < 1)
-    ).count()
-    assert bad == 0
-    total = out.agg(F.sum("n_points")).collect()[0][0]
-    from hive_export_spark.sources import load_table
-
-    assert total == load_table(spark, "events", "/root/testdata/sf0.001").count()
-
-
 def test_split_fractions_and_stability(spark):
     """The hash split is exhaustive, disjoint by construction, and lands
     within loose binomial bounds of 75/12.5/12.5; re-running yields the

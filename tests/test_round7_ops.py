@@ -114,22 +114,6 @@ def test_sf_scratch_dir_recurses_and_prunes(tmp_path):
     assert os.path.exists(ky)
 
 
-def test_evidence_tool_skips_unparseable_basenames(tmp_path):
-    # advisory #4: a CORRECTNESS file whose basename lacks r<digits> must
-    # be skipped, not crash the ledger tool
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "evidence.py"), "--json"],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-    )
-    assert out.returncode == 0, out.stderr
-
-
 def test_determinism_mode_smoke():
     # the --determinism gate (spark-vs-spark at shuffle.partitions 7 vs
     # 32) must run and pass for a representative pair: one decimal-agg

@@ -281,10 +281,11 @@ def build(src: str, out: str) -> None:
         # --- round-7 wave 5: a series whose values sum to EXACTLY ZERO
         # (offsetting charge/refund pairs — a settlement ledger shape
         # the generator's refund rows make plausible any round). Found
-        # a real crash: ts_seasonal_profile divided by the zero series
-        # mean (ANSI DIVIDE_BY_ZERO on Spark, inf on DuckDB); pinned
-        # NULL via try_divide/nullif. The same wave probed the
-        # signed-zero rounding gap with sub-cent magnitudes: Spark's
+        # a real crash: a seasonal index divided by the zero series
+        # mean (ANSI DIVIDE_BY_ZERO on Spark, inf on DuckDB); a division
+        # by a series mean pins NULL via try_divide/nullif. The same
+        # wave probed the signed-zero rounding gap with sub-cent
+        # magnitudes: Spark's
         # round() on DOUBLE goes through BigDecimal, which has no -0,
         # so round(-1e-7, 6) = +0.0, while DuckDB's round preserves
         # the sign bit (-0.0) and repr-based hashing renders them

@@ -37,8 +37,8 @@ from hive_export_spark.registry import all_queries  # noqa: E402
 from hive_export_spark.session import get_spark  # noqa: E402
 
 # Every distinct shuffle shape in the repo's 100 TB story: TPC-H
-# aggregation/join pipelines, window sorts, sketch merges, banded LSH
-# joins, iterative label propagation / pagerank, prefix-sum packing,
+# aggregation/join pipelines, sketch merges, banded LSH joins,
+# iterative label propagation / pagerank, prefix-sum packing,
 # broadcast-probe similarity, one-scan Poisson bootstrap, explode-heavy
 # boilerplate removal, and the inverted-index overlap matrix.
 DEFAULT_SET = [
@@ -46,7 +46,6 @@ DEFAULT_SET = [
     "q3_shipping_priority",
     "q5_local_supplier_volume",
     "join_inner",
-    "window_running_sum",
     "agg_kll_quantile_merge",
     "llm_dedup_exact",
     "llm_dedup_minhash_lsh",
@@ -55,7 +54,6 @@ DEFAULT_SET = [
     "llm_sim_topk_bruteforce",
     "stats_bootstrap_poisson",
     "graph_pagerank",
-    "ts_decompose_additive",
     "llm_boilerplate_chunk_dedup",
     "llm_source_overlap_matrix",
 ]
